@@ -113,6 +113,9 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
                 .start()
             )
 
+    # awaitAnyTermination also reports queries that ended before this
+    # run started on a shared session; wait only on this run's queries
+    spark.streams.resetTerminated()
     queries = build_continuous_pipeline(
         spark,
         config,
@@ -127,25 +130,23 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
         file=sys.stderr,
     )
     try:
+        # returns (or raises the failed query's exception) as soon as
+        # ANY rule query ends, so one failed rule ends the run instead
+        # of going unnoticed behind a healthy one
         if args.duration is not None:
-            import time
-
-            deadline = time.time() + args.duration
-            for q in queries:
-                q.awaitTermination(max(0.0, deadline - time.time()))
-            for q in queries:
-                _drain_and_stop(q)
+            spark.streams.awaitAnyTermination(args.duration)
         else:
-            for q in queries:
-                q.awaitTermination()
+            spark.streams.awaitAnyTermination()
     finally:
+        for q in queries:
+            _drain_and_stop(q)
         if stop_session:
             spark.stop()
     return 0
 
 
 def _drain_and_stop(q, grace_sec: float = 60.0) -> None:
-    """Stop a bounded-run query BETWEEN micro-batches.
+    """Stop a rule query BETWEEN micro-batches.
 
     ``q.stop()`` interrupts the stream-execution thread; if a
     ``FileStreamSink.addBatch`` is in flight the interrupt aborts it,

@@ -113,12 +113,13 @@ def build_continuous_pipeline(
         OUT_METRIC,
         count_edge,
     )
+    from monasca_aggregator_spark.operators.aggregate import (
+        build_streaming_aggregation,
+        with_wallclock_heartbeat,
+    )
     from monasca_aggregator_spark.sources.kafka import (
         read_envelope_stream,
         write_envelope_stream,
-    )
-    from monasca_aggregator_spark.streaming.pipeline import (
-        build_streaming_aggregation,
     )
 
     env = (
@@ -133,10 +134,6 @@ def build_continuous_pipeline(
     # query's StreamingQueryProgress.observedMetrics
     env, _ = count_edge(env, IN_METRIC, streaming=True)
     if config.heartbeat:
-        from monasca_aggregator_spark.streaming.pipeline import (
-            with_wallclock_heartbeat,
-        )
-
         # counted ABOVE the heartbeat union so in_messages stays a
         # true consumed-envelope count (ticks are not messages)
         env = with_wallclock_heartbeat(env, spark)

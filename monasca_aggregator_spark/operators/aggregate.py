@@ -1,4 +1,4 @@
-"""Compile an AggregationSpec into a declarative DataFrame plan.
+"""The rule module: every plan the daemon runs for an AggregationSpec.
 
 The reference iterates every message through every rule, keeping running
 aggregates in a hash-of-hashes keyed by (window, tenant+dims)
@@ -6,13 +6,31 @@ aggregates in a hash-of-hashes keyed by (window, tenant+dims)
 whole rule compiles to::
 
     filter (name / dims / reject / grouped-keys-present)   -- pushdown-able
-      → groupBy(window_start, tenant, *grouped_dims)       -- ONE shuffle
+      → groupBy(window, tenant, *grouped_dims)              -- ONE shuffle
       → agg(function)                                       -- partial agg map-side
       → [groupBy(window_start, tenant, *rollup_dims).agg]   -- optional rollup
 
 and Catalyst/Tungsten choose the physical strategy. At scale this is a
 single hash-partitioned shuffle on a high-cardinality uniform key; the
 rollup stage re-shuffles the already-aggregated (small) output.
+
+Each step of that shape is defined once here — the predicate
+(``matches_metric``), the group keys (``_group_keys``), the function
+table (``_AGG_EXPRS``), the output-dims map (``_output``) and the rollup
+stage (``_rollup``) — and three plans read from them:
+
+- ``build_aggregation``: the batch plan (backfill, catalog queries);
+- ``build_streaming_aggregation``: the continuous plan, which adds only
+  what streaming needs — the watermark (reference windowLag,
+  server.go:215), Spark's epoch-aligned ``F.window`` key (reference
+  windowSize, server.go:213-233), and the heartbeat conjunct that lets
+  quiet topics publish (``with_wallclock_heartbeat``);
+- ``run_stream_with_rollup``: the continuous plan's finalized windows
+  re-aggregated per micro-batch by the same rollup stage.
+
+Batch ≡ streaming therefore holds by construction;
+tests/test_streaming.py asserts it empirically. ``sql_compile`` renders
+the same rule as SQL text and is pinned equal to ``build_aggregation``.
 
 Semantics notes vs the reference:
 - ``delta``/``rate`` take first/last by **event time** by default
@@ -35,11 +53,18 @@ timestamp, value, tenant_id, meta).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import hashlib
+import re
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from monasca_aggregator_spark.functions.windows import window_start_ms
 from monasca_aggregator_spark.models import AggregationSpec
+
+# Reserved metric name for watermark-advancing heartbeat rows; never
+# matches a spec filter and is dropped before output.
+HEARTBEAT_NAME = "__heartbeat__"
 
 # Aggregate expression factories: (value, event-time ms, order key) →
 # Column. ``order`` is the first/last ordering for delta/rate — the
@@ -76,11 +101,6 @@ _AGG_EXPRS = {
     ),
 }
 
-# Rollup input is the first stage's (value, window_ts_ms) output, so
-# event time is constant within a group: delta degenerates to 0 and rate
-# to NULL, mirroring the reference's behavior of re-running the metric
-# holders on aggregated envelopes (aggregation_rule.go:104-125).
-
 
 def matches_metric(spec: AggregationSpec, name: Column, dims: Column) -> Column:
     """Predicate equivalent of Rule.MatchesMetric
@@ -102,16 +122,92 @@ def matches_metric(spec: AggregationSpec, name: Column, dims: Column) -> Column:
     return pred
 
 
+def _ident(k: str) -> str:
+    """Sanitized, COLLISION-FREE alias for a dimension key.
+
+    A raw key can hold characters a column name cannot ('a.b' reads as
+    struct-field access), and plain substitution alone is ambiguous:
+    'a.b' and 'a_b' would both become __dim_a_b, so a spec grouping on
+    both would silently mis-pair the output map. Any key that needed
+    sanitizing gets a short hash of the RAW key appended, so distinct
+    keys always map to distinct aliases while clean keys keep their
+    readable form.
+    """
+    safe = re.sub(r"[^A-Za-z0-9_]", "_", k)
+    if safe != k:
+        digest = hashlib.sha1(k.encode()).hexdigest()[:8]
+        safe = f"{safe}_x{digest}"
+    return "__dim_" + safe
+
+
+def _group_keys(keys: tuple[str, ...]) -> list[Column]:
+    """The grouped dimension values, one ``_ident`` column per key."""
+    dims = F.col("dimensions")
+    return [dims.getItem(k).alias(_ident(k)) for k in keys]
+
+
+def _aggregate(
+    matched: DataFrame,
+    window: Column,
+    spec: AggregationSpec,
+    *extra: Column,
+    order: Column | None = None,
+) -> DataFrame:
+    """First stage: one row per (window, tenant, grouped values) with
+    the rule's function as ``value`` (plus any ``extra`` aggregates)."""
+    ts_ms = F.unix_millis(F.col("timestamp"))
+    value = _AGG_EXPRS[spec.function](
+        F.col("value"), ts_ms, ts_ms if order is None else order
+    )
+    return matched.groupBy(
+        window, F.col("tenant_id"), *_group_keys(spec.grouped_dimensions)
+    ).agg(value.alias("value"), *extra)
+
+
+def _output(
+    out: DataFrame,
+    window_ts: Column,
+    spec: AggregationSpec,
+    keys: tuple[str, ...],
+) -> DataFrame:
+    """The published envelope shape. Output dimensions =
+    filteredDimensions ∪ the grouped values of ``keys``
+    (reference: aggregation/metric_holder.go:44-61)."""
+    entries: list[Column] = []
+    for k, v in spec.filtered_dimensions.items():
+        entries += [F.lit(k), F.lit(v)]
+    for k in keys:
+        entries += [F.lit(k), F.col(_ident(k))]
+    return out.select(
+        window_ts,
+        F.col("tenant_id"),
+        F.lit(spec.aggregated_metric_name).alias("name"),
+        F.create_map(*entries).alias("dimensions"),
+        F.col("value"),
+    )
+
+
+def _rollup(first: DataFrame, spec: AggregationSpec) -> DataFrame:
+    """Second stage over the rollup's subset keys. Input is the first
+    stage's (window_ts_ms, tenant_id, grouped values, value), so event
+    time is the window start, constant per group: delta degenerates to
+    0 and rate to NULL, mirroring the reference's re-run of the metric
+    holders on aggregated envelopes (aggregation_rule.go:104-125)."""
+    rollup = spec.rollup
+    roll_ts = F.col("window_ts_ms")
+    value = _AGG_EXPRS[rollup.function](F.col("value"), roll_ts, roll_ts)
+    keys = [F.col(_ident(k)) for k in rollup.grouped_dimensions]
+    out = first.groupBy(roll_ts, F.col("tenant_id"), *keys).agg(
+        value.alias("value")
+    )
+    return _output(out, roll_ts, spec, rollup.grouped_dimensions)
+
+
 def build_aggregation(
     df: DataFrame,
     spec: AggregationSpec,
     window_size_sec: int,
     *,
-    ts_col: str = "timestamp",
-    value_col: str = "value",
-    name_col: str = "name",
-    dims_col: str = "dimensions",
-    tenant_col: str = "tenant_id",
     arrival_col: str | None = None,
 ) -> DataFrame:
     """Return the aggregated-metric DataFrame for one rule.
@@ -121,17 +217,7 @@ def build_aggregation(
     (window, tenant, group), like the envelopes the reference emits from
     Rule.GetMetrics (aggregation/aggregation_rule.go:80-136).
     """
-    ts = F.col(ts_col)
-    dims = F.col(dims_col)
-
-    matched = df.filter(matches_metric(spec, F.col(name_col), dims))
-
-    window_ts = window_start_ms(ts, window_size_sec).alias("window_ts_ms")
-    group_cols = [window_ts, F.col(tenant_col)]
-    for k in spec.grouped_dimensions:
-        group_cols.append(dims.getItem(k).alias(f"__dim_{k}"))
-
-    ts_ms = F.unix_millis(ts)
+    order = None
     if spec.time_source == "arrival":
         if arrival_col is None:
             raise ValueError(
@@ -139,39 +225,187 @@ def build_aggregation(
                 "arrival_col (e.g. the Kafka offset column)"
             )
         order = F.col(arrival_col)
-    else:
-        order = ts_ms
-    agg_value = _AGG_EXPRS[spec.function](F.col(value_col), ts_ms, order)
-    out = matched.groupBy(*group_cols).agg(agg_value.alias("value"))
-
-    if spec.rollup is not None:
-        # Second stage over the subset keys; input event time is the
-        # window start, constant per group (see note above).
-        roll_ts = F.col("window_ts_ms")
-        roll_groups = [F.col("window_ts_ms"), F.col(tenant_col)]
-        for k in spec.rollup.grouped_dimensions:
-            roll_groups.append(F.col(f"__dim_{k}"))
-        roll_value = _AGG_EXPRS[spec.rollup.function](
-            F.col("value"), roll_ts, roll_ts
-        )
-        out = out.groupBy(*roll_groups).agg(roll_value.alias("value"))
-        out_dim_keys = spec.rollup.grouped_dimensions
-    else:
-        out_dim_keys = spec.grouped_dimensions
-
-    # Output dimensions = filteredDimensions ∪ grouped values
-    # (reference: aggregation/metric_holder.go:44-61).
-    dim_entries: list[Column] = []
-    for k, v in spec.filtered_dimensions.items():
-        dim_entries += [F.lit(k), F.lit(v)]
-    for k in out_dim_keys:
-        dim_entries += [F.lit(k), F.col(f"__dim_{k}")]
-    out_dims = F.create_map(*dim_entries) if dim_entries else F.create_map()
-
-    return out.select(
-        F.col("window_ts_ms"),
-        F.col(tenant_col),
-        F.lit(spec.aggregated_metric_name).alias("name"),
-        out_dims.alias("dimensions"),
-        F.col("value"),
+    matched = df.filter(
+        matches_metric(spec, F.col("name"), F.col("dimensions"))
     )
+    window_ts = window_start_ms(F.col("timestamp"), window_size_sec)
+    out = _aggregate(
+        matched, window_ts.alias("window_ts_ms"), spec, order=order
+    )
+    if spec.rollup is not None:
+        return _rollup(out, spec)
+    return _output(out, F.col("window_ts_ms"), spec, spec.grouped_dimensions)
+
+
+def with_wallclock_heartbeat(env: DataFrame, spark: SparkSession) -> DataFrame:
+    """Union the envelope relation with a rate-source heartbeat so the
+    watermark keeps advancing when the topic goes QUIET.
+
+    Spark's watermark moves only on new data; the reference instead
+    publishes a window at ``windowLag`` past its close on a wall-clock
+    ticker (server.go:213-296), so its quiet-stream windows still
+    finalize. The heartbeat closes that gap the Spark-native way: a
+    ``rate`` source emits one row/sec whose event time IS wall clock,
+    tagged ``__heartbeat__`` so every spec filter drops it — it
+    contributes nothing to any aggregate, but the event-time watermark
+    (applied upstream of the filters in
+    ``build_streaming_aggregation``) tracks wall clock, and idle
+    windows publish within lag + trigger interval, exactly the
+    reference's publication schedule.
+
+    The rate source is per-partition-0 trivial (1 row/sec) — no
+    measurable load at any scale.
+
+    Optimizer subtlety this design routes around: Catalyst pushes any
+    filter conjunct that does not reference the event-time column BELOW
+    the EventTimeWatermark node (PushPredicateThroughNonJoin), so a
+    plain "drop heartbeats" pre-aggregation filter would discard them
+    before they ever update the watermark. Heartbeat rows therefore
+    PASS the spec filter (build_streaming_aggregation ORs them in),
+    flow through the watermark into their own (reserved-tenant) groups,
+    and are dropped after aggregation via a predicate on an aggregated
+    column — which Catalyst cannot push down.
+    """
+    hb = spark.readStream.format("rate").option("rowsPerSecond", "1").load()
+    types = dict(env.dtypes)
+    exprs = []
+    for c in env.columns:
+        if c == "timestamp":
+            exprs.append(F.col("timestamp").alias(c))
+        elif c in ("name", "tenant_id"):
+            # reserved tenant too: heartbeat rows can never share a
+            # group with real data, so dropping their groups post-agg
+            # is exact
+            exprs.append(F.lit(HEARTBEAT_NAME).alias(c))
+        else:
+            exprs.append(F.lit(None).cast(types[c]).alias(c))
+    return env.unionByName(hb.select(*exprs))
+
+
+def _streaming_stage(
+    df: DataFrame, spec: AggregationSpec, window_size_sec: int, lag_sec: int
+) -> DataFrame:
+    """The first stage as a watermarked streaming aggregation, keyed by
+    the ``F.window`` struct ``w``; heartbeat groups already dropped."""
+    if dict(df.dtypes).get("timestamp") == "timestamp_ntz":
+        # withWatermark requires TIMESTAMP (with timezone); parquet file
+        # sources may surface event time as TIMESTAMP_NTZ depending on
+        # writer metadata. Session timezone is UTC, so the cast is a
+        # pure type relabel, not a wall-clock shift.
+        df = df.withColumn("timestamp", F.col("timestamp").cast("timestamp"))
+    # heartbeat rows PASS the filter (one OR'd conjunct, so Catalyst's
+    # push-below-watermark still keeps them) and advance the watermark;
+    # they aggregate into their own reserved-tenant groups and are
+    # dropped below via the aggregated __hb flag — the only filter
+    # position the optimizer cannot push underneath the watermark
+    is_hb = F.col("name") == HEARTBEAT_NAME
+    matched = df.withWatermark("timestamp", f"{lag_sec} seconds").filter(
+        matches_metric(spec, F.col("name"), F.col("dimensions")) | is_hb
+    )
+    window = F.window(F.col("timestamp"), f"{window_size_sec} seconds")
+    # streaming is consume-order by nature; the deterministic event-time
+    # ordering doubles as the arrival order under watermark replay
+    return _aggregate(
+        matched, window.alias("w"), spec, F.max(is_hb).alias("__hb")
+    ).filter(F.col("__hb") == F.lit(False))
+
+
+def build_streaming_aggregation(
+    df: DataFrame,
+    spec: AggregationSpec,
+    window_size_sec: int,
+    lag_sec: int,
+) -> DataFrame:
+    """Streaming-safe single-stage aggregation plan.
+
+    Same output schema as the batch ``build_aggregation`` (minus
+    rollup): window_ts_ms, tenant_id, name, dimensions, value.
+    """
+    if spec.rollup is not None:
+        raise ValueError(
+            "rollup is a second stateful aggregation: run it in "
+            "foreachBatch on this plan's output"
+        )
+    out = _streaming_stage(df, spec, window_size_sec, lag_sec)
+    window_ts = F.unix_millis(F.col("w.start")).alias("window_ts_ms")
+    return _output(out, window_ts, spec, spec.grouped_dimensions)
+
+
+def run_stream_with_rollup(
+    spark: SparkSession,
+    env_stream: DataFrame,
+    spec: AggregationSpec,
+    window_size_sec: int,
+    lag_sec: int,
+    *,
+    query_name: str = "rollup_stream",
+    sink=None,
+) -> DataFrame:
+    """Rollup rule on a stream: stage 1 is the watermarked windowed
+    aggregation; stage 2 (the rollup re-aggregation) runs per
+    micro-batch in ``foreachBatch`` over stage 1's FINALIZED windows —
+    exactly when the reference rolls up (at publish time,
+    aggregation_rule.go:88-136). Append mode guarantees each window
+    reaches foreachBatch once, so re-aggregating the batch is correct
+    without cross-batch state.
+
+    ``sink(rolled_df, batch_id)`` receives each batch's rollup output;
+    in production point it at a distributed write (Kafka/parquet) —
+    rollup output never needs to touch the driver. The default sink
+    collects into the returned DataFrame (test/driver-verification
+    convenience; rollup outputs are per-window aggregates, small by
+    construction). Runs with availableNow and returns after the stream
+    drains.
+    """
+    if spec.rollup is None:
+        raise ValueError("spec has no rollup stage")
+    first = _streaming_stage(
+        env_stream, spec, window_size_sec, lag_sec
+    ).withColumn("window_ts_ms", F.unix_millis(F.col("w.start")))
+    return run_stream_with_publish(
+        spark, first, lambda batch: _rollup(batch, spec), sink=sink,
+        query_name=query_name,
+    )
+
+
+def run_stream_with_publish(
+    spark: SparkSession,
+    finalized: DataFrame,
+    transform,
+    *,
+    sink=None,
+    query_name: str = "publish_stream",
+) -> DataFrame:
+    """Generic publish-time stage: run ``transform(batch_df)`` over
+    each append-mode micro-batch of FINALIZED windows in foreachBatch.
+
+    Append mode guarantees each window reaches the transform exactly
+    once (after the watermark passes), so any batch-correct transform
+    — rollup, per-window top-k, alerting joins — is streaming-correct
+    here with no cross-batch state. ``sink(df, batch_id)`` defaults to
+    collecting into the returned DataFrame (tests); in production
+    point it at a distributed write.
+    """
+    batches: list = []
+
+    def _collect_sink(out: DataFrame, batch_id: int) -> None:
+        batches.append(out.collect())
+
+    sink = sink or _collect_sink
+
+    def _publish(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            sink(transform(batch_df), batch_id)
+
+    q = (
+        finalized.writeStream.foreachBatch(_publish)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    rows = [r for b in batches for r in b]
+    schema = transform(
+        spark.createDataFrame([], finalized.schema)
+    ).schema
+    return spark.createDataFrame(rows, schema)

@@ -70,34 +70,21 @@ def read_envelope_stream(
     spark: SparkSession,
     bootstrap_servers: str,
     topic: str,
-    *,
-    heartbeat: bool = False,
     **kwargs,
 ) -> DataFrame:
     """readStream from Kafka → parsed flat envelope relation.
 
     The returned DataFrame feeds
-    streaming.pipeline.build_streaming_aggregation unchanged — the
+    operators.aggregate.build_streaming_aggregation unchanged — the
     file-source test path and the Kafka path share every operator
-    downstream of the parse.
-
-    ``heartbeat=True`` unions in the wall-clock rate-source heartbeat
-    (streaming.pipeline.with_wallclock_heartbeat) so windows finalize
-    at lag past close even when the topic goes quiet — the reference's
-    processing-time publication schedule (server.go:213-296). Leave it
-    off for availableNow/batch-replay runs.
+    downstream of the parse. The wall-clock heartbeat is not applied
+    here: ``config.build_continuous_pipeline`` unions it in (after the
+    in_messages counter) when ``EngineConfig.heartbeat`` is on.
     """
     reader = spark.readStream.format("kafka")
     for k, v in source_options(bootstrap_servers, topic, **kwargs).items():
         reader = reader.option(k, v)
-    env = parse_envelopes(reader.load(), value_col="value")
-    if heartbeat:
-        from monasca_aggregator_spark.streaming.pipeline import (
-            with_wallclock_heartbeat,
-        )
-
-        env = with_wallclock_heartbeat(env, spark)
-    return env
+    return parse_envelopes(reader.load(), value_col="value")
 
 
 def envelopes_to_json(aggregated: DataFrame) -> DataFrame:

@@ -1,8 +1,11 @@
-"""Compile an AggregationSpec to ONE portable Spark SQL string.
+"""Render an AggregationSpec as ONE portable Spark SQL string.
 
-``build_aggregation`` (operators/aggregate.py) produces a DataFrame
-plan; this module produces the equivalent **SQL text** — the DSL's
-second backend. What it buys:
+``operators/aggregate.py`` is the rule module: it compiles a spec into
+the batch and streaming DataFrame plans the daemon runs. This module is
+a separate text renderer of the same rule — the DSL's second backend,
+behind ``--emit-sql``. It stays separate because public PySpark has no
+way to turn a Column into SQL; folding the two together would make
+every term branch on its caller. What the text buys:
 
 - **Portability**: the rule runs on any Spark SQL endpoint (Thrift
   server / Spark Connect / a notebook cell) with no Python on the
@@ -24,39 +27,20 @@ metric_holder.go:44-61 — semantics only; the SQL generation is
 original).
 
 Identifiers: dimension keys and metric names are embedded as SQL
-string literals with single-quote escaping; generated column aliases
-are sanitized to ``[A-Za-z0-9_]`` with a raw-key hash suffix whenever
-sanitizing changed the key, so distinct keys never collide.
+string literals with backslash and single-quote escaping; grouped
+columns take the rule module's collision-free ``_ident`` aliases.
 """
 
 from __future__ import annotations
 
-import hashlib
-import re
-
 from monasca_aggregator_spark.models import AggregationSpec
+from monasca_aggregator_spark.operators.aggregate import _ident
 
 
 def _q(s: str) -> str:
-    """SQL single-quoted string literal."""
-    return "'" + s.replace("'", "''") + "'"
-
-
-def _ident(k: str) -> str:
-    """Sanitized, COLLISION-FREE alias for a dimension key.
-
-    Plain substitution alone is ambiguous: 'a.b' and 'a_b' would both
-    become __dim_a_b, so a spec grouping on both generates duplicate
-    aliases and silently mis-pairs the output map. Any key that needed
-    sanitizing gets a short hash of the RAW key appended, so distinct
-    keys always map to distinct aliases while clean keys keep their
-    readable form.
-    """
-    safe = re.sub(r"[^A-Za-z0-9_]", "_", k)
-    if safe != k:
-        digest = hashlib.sha1(k.encode()).hexdigest()[:8]
-        safe = f"{safe}_x{digest}"
-    return "__dim_" + safe
+    """SQL single-quoted string literal. Spark SQL reads a backslash in
+    a literal as an escape character, so backslashes are escaped too."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def _agg_sql(fn: str, value: str, ts_ms: str, order: str) -> str:
@@ -83,24 +67,15 @@ def spec_to_sql(
     spec: AggregationSpec,
     window_size_sec: int,
     *,
-    source: str = "envelopes",
-    ts_col: str = "timestamp",
-    value_col: str = "value",
-    name_col: str = "name",
-    dims_col: str = "dimensions",
-    tenant_col: str = "tenant_id",
     arrival_col: str | None = None,
 ) -> str:
-    """One SELECT statement equivalent to ``build_aggregation``.
-
-    ``source`` is a table/view name (register the envelope relation
-    with ``df.createOrReplaceTempView``) or any parenthesizable
-    subquery alias target.
-    """
+    """One SELECT statement equivalent to ``build_aggregation``, over
+    the envelope relation registered as the view ``envelopes``
+    (``df.createOrReplaceTempView("envelopes")``)."""
     w_ms = 1000 * window_size_sec
-    dim = lambda k: f"{dims_col}[{_q(k)}]"  # noqa: E731
+    dim = lambda k: f"dimensions[{_q(k)}]"  # noqa: E731
 
-    preds = [f"{name_col} = {_q(spec.filtered_metric_name)}"]
+    preds = [f"name = {_q(spec.filtered_metric_name)}"]
     for k, v in spec.filtered_dimensions.items():
         preds.append(f"{dim(k)} = {_q(v)}")
     for k, v in spec.rejected_dimensions.items():
@@ -129,29 +104,29 @@ def spec_to_sql(
         f",\n         {arrival_col}" if spec.time_source == "arrival" else ""
     )
     matched = (
-        f"  SELECT unix_millis({ts_col}) "
-        f"- pmod(unix_millis({ts_col}), {w_ms}) AS window_ts_ms,\n"
-        f"         {tenant_col},\n"
-        f"         {value_col} AS __value,\n"
-        f"         unix_millis({ts_col}) AS __ts_ms"
+        "  SELECT unix_millis(timestamp) "
+        f"- pmod(unix_millis(timestamp), {w_ms}) AS window_ts_ms,\n"
+        "         tenant_id,\n"
+        "         value AS __value,\n"
+        "         unix_millis(timestamp) AS __ts_ms"
         f"{dim_sel}{order_sel}\n"
-        f"  FROM {source}\n"
+        "  FROM envelopes\n"
         f"  WHERE " + "\n    AND ".join(preds)
     )
 
-    g1 = ["window_ts_ms", tenant_col] + [
+    g1 = ["window_ts_ms", "tenant_id"] + [
         _ident(k) for k in spec.grouped_dimensions
     ]
     agg1 = _agg_sql(spec.function, "__value", "__ts_ms", order)
     stage1 = (
         f"  SELECT {', '.join(g1)},\n"
         f"         {agg1} AS value\n"
-        f"  FROM matched\n"
+        "  FROM matched\n"
         f"  GROUP BY {', '.join(g1)}"
     )
 
     if spec.rollup is not None:
-        g2 = ["window_ts_ms", tenant_col] + [
+        g2 = ["window_ts_ms", "tenant_id"] + [
             _ident(k) for k in spec.rollup.grouped_dimensions
         ]
         # rollup input's event time is the window start — constant per
@@ -162,7 +137,7 @@ def spec_to_sql(
         stage2 = (
             f"  SELECT {', '.join(g2)},\n"
             f"         {agg2} AS value\n"
-            f"  FROM stage1\n"
+            "  FROM stage1\n"
             f"  GROUP BY {', '.join(g2)}"
         )
         out_dim_keys = spec.rollup.grouped_dimensions
@@ -183,10 +158,10 @@ def spec_to_sql(
 
     return (
         f"{ctes}\n"
-        f"SELECT window_ts_ms,\n"
-        f"       {tenant_col},\n"
+        "SELECT window_ts_ms,\n"
+        "       tenant_id,\n"
         f"       {_q(spec.aggregated_metric_name)} AS name,\n"
         f"       {dims_expr} AS dimensions,\n"
-        f"       value\n"
-        f"FROM agg"
+        "       value\n"
+        "FROM agg"
     )

@@ -1,6 +1,3 @@
-from monasca_aggregator_spark.streaming.pipeline import (
-    build_streaming_aggregation,
-    run_events_stream_to_memory,
-)
+from monasca_aggregator_spark.streaming.pipeline import run_events_stream_to_memory
 
-__all__ = ["build_streaming_aggregation", "run_events_stream_to_memory"]
+__all__ = ["run_events_stream_to_memory"]

@@ -1,28 +1,19 @@
-"""Continuous aggregation as Structured Streaming.
+"""Catalog streaming operators built on Structured Streaming.
 
-Maps the reference's runtime concepts onto Spark's:
+The daemon core — the heartbeat, the watermarked windowed rule
+aggregation and its publish-time rollup — lives with the batch plan in
+``operators/aggregate.py``, so each rule is compiled in one place. This
+module holds the catalog's other streaming operators: publish-time
+transforms (per-window top-k), streaming exact dedup, the events-table
+replay to a memory sink, custom stateful operators (EWMA, t-digest quantiles,
+heavy hitters, KMV distinct, drift and anomaly detectors, CDC apply,
+capped sessions, ...), a stream-stream interval join, document
+curation, and the dedup / index-maintenance sinks.
 
-- reference windowSize (tumbling, epoch-aligned; server.go:213-233,
-  aggregation_rule.go:52) → ``F.window(ts, "<size> seconds")`` (Spark
-  tumbling windows are epoch-aligned by construction);
-- reference windowLag (publish at lag past window close; server.go:215)
-  → ``withWatermark(ts, "<lag> seconds")``: a window is finalized and
-  emitted once the watermark (max event time − lag) passes its end —
-  the same trigger condition, driven by event time instead of wall
-  clock;
-- the in-memory window cache + manual Kafka offset commits
-  (caching.go, server.go:258-282) → the state store + checkpointing,
-  which give the same no-data-loss / at-least-once replay semantics.
-
-The logical aggregation is compiled by the same predicate/aggregate
-factories the batch path uses (operators/aggregate.py), so batch ≡
-streaming by construction; tests/test_streaming.py asserts it
-empirically.
-
-Rollup note: a rollup is a second stateful aggregation; in continuous
-mode run it in ``foreachBatch`` on the finalized first-stage output
-(the reference likewise rolls up only at publish time,
-aggregation_rule.go:88).
+Windows and lag map onto Spark's the same way as in the daemon: the
+reference windowSize (tumbling, epoch-aligned) is ``F.window`` and its
+windowLag is the watermark delay; the state store + checkpointing give
+the reference's no-data-loss / at-least-once replay semantics.
 """
 
 from __future__ import annotations
@@ -31,251 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from monasca_aggregator_spark.models import AggregationSpec
-from monasca_aggregator_spark.operators.aggregate import _AGG_EXPRS, matches_metric
-
-# Reserved metric name for watermark-advancing heartbeat rows; never
-# matches a spec filter and is dropped before aggregation.
-HEARTBEAT_NAME = "__heartbeat__"
-
-
-def with_wallclock_heartbeat(
-    env: DataFrame,
-    spark: SparkSession,
-    *,
-    rows_per_second: int = 1,
-    ts_col: str = "timestamp",
-) -> DataFrame:
-    """Union the envelope relation with a rate-source heartbeat so the
-    watermark keeps advancing when the topic goes QUIET.
-
-    Spark's watermark moves only on new data; the reference instead
-    publishes a window at ``windowLag`` past its close on a wall-clock
-    ticker (server.go:213-296), so its quiet-stream windows still
-    finalize. The heartbeat closes that gap the Spark-native way: a
-    ``rate`` source emits one row/sec whose event time IS wall clock,
-    tagged ``__heartbeat__`` so every spec filter drops it — it
-    contributes nothing to any aggregate, but the event-time watermark
-    (applied upstream of the filters in
-    ``build_streaming_aggregation``) tracks wall clock, and idle
-    windows publish within lag + trigger interval, exactly the
-    reference's publication schedule.
-
-    The rate source is per-partition-0 trivial (1 row/sec) — no
-    measurable load at any scale.
-
-    Optimizer subtlety this design routes around: Catalyst pushes any
-    filter conjunct that does not reference the event-time column BELOW
-    the EventTimeWatermark node (PushPredicateThroughNonJoin), so a
-    plain "drop heartbeats" pre-aggregation filter would discard them
-    before they ever update the watermark. Heartbeat rows therefore
-    PASS the spec filter (build_streaming_aggregation ORs them in),
-    flow through the watermark into their own (reserved-tenant) groups,
-    and are dropped after aggregation via a predicate on an aggregated
-    column — which Catalyst cannot push down.
-    """
-    cols = env.columns
-    hb = spark.readStream.format("rate").option(
-        "rowsPerSecond", str(rows_per_second)
-    ).load()
-    exprs = []
-    for c in cols:
-        if c == ts_col:
-            exprs.append(F.col("timestamp").alias(ts_col))
-        elif c == "name":
-            exprs.append(F.lit(HEARTBEAT_NAME).alias("name"))
-        elif c == "tenant_id":
-            # reserved tenant: heartbeat rows can never share a group
-            # with real data, so dropping their groups post-agg is exact
-            exprs.append(F.lit(HEARTBEAT_NAME).alias("tenant_id"))
-        else:
-            typ = dict(env.dtypes)[c]
-            exprs.append(F.lit(None).cast(typ).alias(c))
-    return env.unionByName(hb.select(*exprs))
-
-
-def build_streaming_aggregation(
-    df: DataFrame,
-    spec: AggregationSpec,
-    window_size_sec: int,
-    lag_sec: int,
-    *,
-    ts_col: str = "timestamp",
-    value_col: str = "value",
-    name_col: str = "name",
-    dims_col: str = "dimensions",
-    tenant_col: str = "tenant_id",
-) -> DataFrame:
-    """Streaming-safe single-stage aggregation plan.
-
-    Same output schema as the batch ``build_aggregation`` (minus
-    rollup): window_ts_ms, tenant_id, name, dimensions, value.
-    """
-    if spec.rollup is not None:
-        raise ValueError(
-            "rollup is a second stateful aggregation: run it in "
-            "foreachBatch on this plan's output"
-        )
-    if dict(df.dtypes).get(ts_col) == "timestamp_ntz":
-        # withWatermark requires TIMESTAMP (with timezone); parquet file
-        # sources may surface event time as TIMESTAMP_NTZ depending on
-        # writer metadata. Session timezone is UTC, so the cast is a
-        # pure type relabel, not a wall-clock shift.
-        df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    dims = F.col(dims_col)
-    # heartbeat rows PASS the filter (one OR'd conjunct, so Catalyst's
-    # push-below-watermark still keeps them) and advance the watermark;
-    # they aggregate into their own reserved-tenant groups and are
-    # dropped below via the aggregated __hb flag — the only filter
-    # position the optimizer cannot push underneath the watermark
-    is_hb = F.col(name_col) == HEARTBEAT_NAME
-    matched = df.withWatermark(ts_col, f"{lag_sec} seconds").filter(
-        matches_metric(spec, F.col(name_col), dims) | is_hb
-    )
-    group_cols = [
-        F.window(F.col(ts_col), f"{window_size_sec} seconds").alias("w"),
-        F.col(tenant_col),
-    ]
-    for k in spec.grouped_dimensions:
-        group_cols.append(dims.getItem(k).alias(f"__dim_{k}"))
-    ts_ms = F.unix_millis(F.col(ts_col))
-    # streaming is consume-order by nature; the deterministic event-time
-    # ordering doubles as the arrival order under watermark replay
-    agg_value = _AGG_EXPRS[spec.function](F.col(value_col), ts_ms, ts_ms)
-    out = (
-        matched.groupBy(*group_cols)
-        .agg(agg_value.alias("value"), F.max(is_hb).alias("__hb"))
-        .filter(F.col("__hb") == F.lit(False))
-    )
-
-    dim_entries = []
-    for k, v in spec.filtered_dimensions.items():
-        dim_entries += [F.lit(k), F.lit(v)]
-    for k in spec.grouped_dimensions:
-        dim_entries += [F.lit(k), F.col(f"__dim_{k}")]
-    out_dims = F.create_map(*dim_entries) if dim_entries else F.create_map()
-
-    return out.select(
-        F.unix_millis(F.col("w.start")).alias("window_ts_ms"),
-        F.col(tenant_col),
-        F.lit(spec.aggregated_metric_name).alias("name"),
-        out_dims.alias("dimensions"),
-        F.col("value"),
-    )
-
-
-def run_stream_with_rollup(
-    spark: SparkSession,
-    env_stream: DataFrame,
-    spec: AggregationSpec,
-    window_size_sec: int,
-    lag_sec: int,
-    *,
-    query_name: str = "rollup_stream",
-    sink=None,
-) -> DataFrame:
-    """Rollup rule on a stream: stage 1 is the watermarked windowed
-    aggregation; stage 2 (the rollup re-aggregation) runs per
-    micro-batch in ``foreachBatch`` over stage 1's FINALIZED windows —
-    exactly when the reference rolls up (at publish time,
-    aggregation_rule.go:88-136). Append mode guarantees each window
-    reaches foreachBatch once, so re-aggregating the batch is correct
-    without cross-batch state.
-
-    ``sink(rolled_df, batch_id)`` receives each batch's rollup output;
-    in production point it at a distributed write (Kafka/parquet) —
-    rollup output never needs to touch the driver. The default sink
-    collects into the returned DataFrame (test/driver-verification
-    convenience; rollup outputs are per-window aggregates, small by
-    construction). Runs with availableNow and returns after the stream
-    drains.
-    """
-    import dataclasses
-
-    if spec.rollup is None:
-        raise ValueError("spec has no rollup stage")
-    rollup = spec.rollup
-    first = build_streaming_aggregation(
-        env_stream,
-        dataclasses.replace(spec, rollup=None),
-        window_size_sec,
-        lag_sec,
-    )
-
-    def _rollup_of(batch_df: DataFrame) -> DataFrame:
-        groups = [F.col("window_ts_ms"), F.col("tenant_id")]
-        out_dim_entries: list = []
-        for k in rollup.grouped_dimensions:
-            groups.append(
-                F.col("dimensions").getItem(k).alias(f"__dim_{k}")
-            )
-            out_dim_entries += [F.lit(k), F.col(f"__dim_{k}")]
-        value = _AGG_EXPRS[rollup.function](
-            F.col("value"), F.col("window_ts_ms"), F.col("window_ts_ms")
-        )
-        out_dims = (
-            F.create_map(*out_dim_entries)
-            if out_dim_entries
-            else F.create_map()
-        )
-        return (
-            batch_df.groupBy(*groups)
-            .agg(value.alias("value"))
-            .select(
-                "window_ts_ms",
-                "tenant_id",
-                F.lit(spec.aggregated_metric_name).alias("name"),
-                out_dims.alias("dimensions"),
-                "value",
-            )
-        )
-
-    return run_stream_with_publish(
-        spark, first, _rollup_of, sink=sink, query_name=query_name
-    )
-
-
-def run_stream_with_publish(
-    spark: SparkSession,
-    finalized: DataFrame,
-    transform,
-    *,
-    sink=None,
-    query_name: str = "publish_stream",
-) -> DataFrame:
-    """Generic publish-time stage: run ``transform(batch_df)`` over
-    each append-mode micro-batch of FINALIZED windows in foreachBatch.
-
-    Append mode guarantees each window reaches the transform exactly
-    once (after the watermark passes), so any batch-correct transform
-    — rollup, per-window top-k, alerting joins — is streaming-correct
-    here with no cross-batch state. ``sink(df, batch_id)`` defaults to
-    collecting into the returned DataFrame (tests); in production
-    point it at a distributed write.
-    """
-    batches: list = []
-
-    def _collect_sink(out: DataFrame, batch_id: int) -> None:
-        batches.append(out.collect())
-
-    sink = sink or _collect_sink
-
-    def _publish(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            sink(transform(batch_df), batch_id)
-
-    q = (
-        finalized.writeStream.foreachBatch(_publish)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = [r for b in batches for r in b]
-    schema = transform(
-        spark.createDataFrame([], finalized.schema)
-    ).schema
-    return spark.createDataFrame(rows, schema)
-
+from monasca_aggregator_spark.operators.aggregate import build_streaming_aggregation
 
 def topk_per_window(k: int, *, by: str = "value"):
     """Publish-time transform: the top-``k`` groups per finalized

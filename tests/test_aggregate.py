@@ -271,6 +271,24 @@ def test_output_dims_are_filtered_union_grouped(spark):
     assert out[0].dimensions == {"service": "api", "host": "h1"}
 
 
+def test_dotted_and_underscored_group_keys_stay_distinct(spark):
+    """A grouped key containing '.' is not a column path, and 'a.b' and
+    'a_b' must not share a group column: both land in the output map
+    under their raw names."""
+    spec = _spec(grouped_dimensions=("a.b", "a_b"))
+    df = _env_df(
+        spark,
+        [
+            ("cpu", {"a.b": "dot", "a_b": "underscore"}, 1, 3, "t0"),
+            ("cpu", {"a.b": "dot", "a_b": "other"}, 2, 4, "t0"),
+        ],
+    )
+    assert _result(df, spec) == {
+        (T0_MS, "t0", (("a.b", "dot"), ("a_b", "other"))): 4.0,
+        (T0_MS, "t0", (("a.b", "dot"), ("a_b", "underscore"))): 3.0,
+    }
+
+
 def test_rollup_reaggregates_over_subset(spark):
     # avg per (window, host) then max of those avgs per window
     # (aggregation_rule.go:88-136)

@@ -103,7 +103,7 @@ def test_publisher_batches_drive_the_streaming_pipeline(spark, tmp_path):
 
     from monasca_aggregator_spark.models import AggregationSpec
     from monasca_aggregator_spark.sources.envelope import read_envelope_json
-    from monasca_aggregator_spark.streaming.pipeline import (
+    from monasca_aggregator_spark.operators.aggregate import (
         build_streaming_aggregation,
     )
 

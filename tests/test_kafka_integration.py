@@ -101,7 +101,7 @@ def test_streaming_aggregation_from_broker(spark, kafka_ready, tmp_path):
     broker, aggregates checked exactly."""
     from monasca_aggregator_spark.models import AggregationSpec
     from monasca_aggregator_spark.sources.kafka import read_envelope_stream
-    from monasca_aggregator_spark.streaming.pipeline import (
+    from monasca_aggregator_spark.operators.aggregate import (
         build_streaming_aggregation,
     )
     from pyspark.sql import functions as F

@@ -242,7 +242,7 @@ def test_streamed_envelopes_drive_the_spec_aggregation(spark, tmp_path):
     from monasca_aggregator_spark.operators.aggregate import (
         build_aggregation,
     )
-    from monasca_aggregator_spark.streaming.pipeline import (
+    from monasca_aggregator_spark.operators.aggregate import (
         build_streaming_aggregation,
     )
 

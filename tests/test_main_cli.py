@@ -105,6 +105,92 @@ def test_cli_file_mode_end_to_end(spark, tmp_path):
     assert env["meta"]["tenantId"] == "t1"
 
 
+def test_cli_ends_when_a_rule_query_fails(spark, tmp_path, monkeypatch):
+    """One rule's query failing after start must end main() with that
+    query's exception, even while an earlier rule's query stays
+    healthy — not at the --duration deadline, and not never."""
+    import sys
+    import threading
+
+    from pyspark.sql import functions as F
+
+    sys.path.insert(0, "tools")
+    import publisher
+
+    from monasca_aggregator_spark import config
+    from monasca_aggregator_spark.__main__ import main
+
+    _write_yaml_files(tmp_path)
+    with open(tmp_path / "config.yaml", "a") as f:
+        # no heartbeat: the healthy query idles between micro-batches,
+        # so main()'s drain-and-stop of it returns at once
+        f.write("heartbeat: false\n")
+    with open(tmp_path / "specs.yaml", "a") as f:
+        f.write(
+            "  - name: fails\n"
+            "    aggregatedMetricName: metric2.max\n"
+            "    filteredMetricName: metric2\n"
+            "    function: max\n"
+        )
+    src = tmp_path / "src"
+    src.mkdir()
+    # the later batch moves the watermark past the earlier window, so
+    # that window is published (and the failing rule raises) at once
+    t0 = int(time.time() * 1000) - 20_000
+    lines = publisher.make_envelopes(now_ms=t0, tenant="t1")
+    lines += publisher.make_envelopes(now_ms=t0 + 10_000, tenant="t1")
+    (src / "batch0.jsonl").write_text("\n".join(lines) + "\n")
+
+    build = config.build_continuous_pipeline
+
+    def with_failing_rule(spark_, cfg, specs, *, sink, **kw):
+        def failing_sink(plan, spec):
+            if spec.name == "fails":
+                # raise on the first published row, inside the query
+                plan = plan.withColumn(
+                    "value",
+                    F.coalesce(
+                        F.raise_error(F.lit("injected rule failure")).cast(
+                            "double"
+                        ),
+                        F.col("value"),
+                    ),
+                )
+            return sink(plan, spec)
+
+        return build(spark_, cfg, specs, sink=failing_sink, **kw)
+
+    monkeypatch.setattr(config, "build_continuous_pipeline", with_failing_rule)
+    outcome = {}
+
+    def run():
+        try:
+            outcome["rc"] = main(
+                [
+                    "--config", str(tmp_path / "config.yaml"),
+                    "--specs", str(tmp_path / "specs.yaml"),
+                    "--source-dir", str(src),
+                    "--sink-dir", str(tmp_path / "sink"),
+                    "--checkpoint-dir", str(tmp_path / "ckpt"),
+                    "--duration", "300",
+                ],
+                stop_session=False,
+            )
+        except Exception as e:  # noqa: BLE001 — the outcome under test
+            outcome["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(90)
+    try:
+        assert not t.is_alive(), "main() kept waiting after a rule failed"
+        assert "injected rule failure" in str(outcome.get("error"))
+    finally:
+        for q in spark.streams.active:
+            q.stop()
+        t.join(120)
+
+
 def test_emit_sql_prints_each_rule_and_exits():
     """--emit-sql: the reference YAML comes out as one SQL statement
     per rule with no Spark session started."""

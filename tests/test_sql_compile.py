@@ -145,6 +145,10 @@ def test_arrival_mode_orders_by_the_given_column(spark):
 
 
 def test_quote_escaping_in_literals(spark):
+    """Quotes and backslashes in names, keys and values survive as SQL
+    literals: Spark SQL reads '\\' as an escape, so an unescaped
+    backslash would turn the filter value a\\b into a<backspace> and
+    the rule would silently match nothing."""
     from pyspark.sql import functions as F
 
     env = spark.createDataFrame(
@@ -152,7 +156,9 @@ def test_quote_escaping_in_literals(spark):
         "name string, ts string, value double",
     ).select(
         "name",
-        F.expr("map('o''k','v''1')").alias("dimensions"),
+        F.create_map(
+            F.lit("o'k"), F.lit("v'1"), F.lit("p\\q"), F.lit("a\\b")
+        ).alias("dimensions"),
         F.to_timestamp("ts").alias("timestamp"),
         "value",
         F.expr("map()").cast("map<string,string>").alias("value_meta"),
@@ -162,13 +168,18 @@ def test_quote_escaping_in_literals(spark):
     env.createOrReplaceTempView("envelopes")
     spec = AggregationSpec(
         name="sql_quote",
-        aggregated_metric_name="agg.it's",
+        aggregated_metric_name="agg.it's\\x",
         filtered_metric_name="it's",
         function="sum",
-        filtered_dimensions={"o'k": "v'1"},
+        filtered_dimensions={"o'k": "v'1", "p\\q": "a\\b"},
     )
     row = spark.sql(spec_to_sql(spec, 60)).first()
-    assert row.value == 1.0 and row.dimensions["o'k"] == "v'1"
+    assert row is not None, "escaped literals no longer match the row"
+    assert row.value == 1.0
+    assert row.name == "agg.it's\\x"
+    assert row.dimensions == {"o'k": "v'1", "p\\q": "a\\b"}
+    plan_row = build_aggregation(env, spec, 60).first()
+    assert _key(plan_row) == _key(row) and plan_row.value == row.value
 
 
 def test_colliding_dimension_keys_get_distinct_aliases(spark):
@@ -177,7 +188,7 @@ def test_colliding_dimension_keys_get_distinct_aliases(spark):
     duplicate-alias SQL with a silently mis-paired output map."""
     from pyspark.sql import functions as F
 
-    from monasca_aggregator_spark.sql_compile import _ident
+    from monasca_aggregator_spark.operators.aggregate import _ident
 
     assert _ident("a.b") != _ident("a_b")
     assert _ident("a_b") == "__dim_a_b"  # clean keys stay readable

@@ -9,13 +9,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from monasca_aggregator_spark.models import AggregationSpec
-from monasca_aggregator_spark.operators.aggregate import build_aggregation
+from monasca_aggregator_spark.operators.aggregate import (
+    build_aggregation,
+    build_streaming_aggregation,
+)
 from monasca_aggregator_spark.sources.envelope import events_to_envelopes
 from monasca_aggregator_spark.sources.tables import load_table
-from monasca_aggregator_spark.streaming.pipeline import (
-    build_streaming_aggregation,
-    run_events_stream_to_memory,
-)
+from monasca_aggregator_spark.streaming.pipeline import run_events_stream_to_memory
 
 SPEC = AggregationSpec(
     name="stream_test",
@@ -27,23 +27,123 @@ SPEC = AggregationSpec(
 
 
 def _key(r):
-    return (r.window_ts_ms, r.tenant_id, r.dimensions["user_id"])
+    return (r.window_ts_ms, r.tenant_id, tuple(sorted(r.dimensions.items())))
 
 
-def test_streaming_equals_batch(spark, sf_small):
+@pytest.mark.parametrize(
+    "spec",
+    [
+        pytest.param(
+            AggregationSpec(
+                name=f"stream_{fn}",
+                aggregated_metric_name=f"agg.click.{fn}",
+                filtered_metric_name="click",
+                function=fn,
+                grouped_dimensions=("user_id",),
+            ),
+            id=fn,
+        )
+        for fn in ("count", "sum", "avg", "min", "max", "delta", "rate")
+    ]
+    + [
+        pytest.param(
+            AggregationSpec(
+                name="stream_filtered_rejected",
+                aggregated_metric_name="agg.purchase.max",
+                filtered_metric_name="purchase",
+                function="max",
+                filtered_dimensions={"user_id": "9"},
+                # an exact k=v reject, and "" (reject any value) on a key
+                # the events never carry
+                rejected_dimensions={"k": "0", "region": ""},
+                grouped_dimensions=("k",),
+            ),
+            id="filtered_rejected",
+        )
+    ],
+)
+def test_streaming_equals_batch(spark, sf_small, spec):
     batch = build_aggregation(
-        events_to_envelopes(load_table(spark, sf_small, "events")), SPEC, 3600
+        events_to_envelopes(load_table(spark, sf_small, "events")), spec, 3600
     )
     batch_res = {_key(r): r.value for r in batch.collect()}
 
     stream = run_events_stream_to_memory(
-        spark, sf_small, SPEC, query_name="t_stream_eq"
+        spark, sf_small, spec, query_name=f"t_stream_eq_{spec.name}"
     )
     stream_res = {_key(r): r.value for r in stream.collect()}
 
+    assert batch_res, "vacuous: the rule matched nothing"
     assert set(stream_res) == set(batch_res)
     for k, v in batch_res.items():
-        assert stream_res[k] == pytest.approx(v, rel=1e-12)
+        if v is None:  # rate over a single sample
+            assert stream_res[k] is None
+        else:
+            # partial sums merge in a partition-dependent order, which
+            # moves the last bits of sum, avg and rate
+            assert stream_res[k] == pytest.approx(v, rel=1e-12)
+
+
+def test_streaming_dotted_and_underscored_group_keys_stay_distinct(
+    spark, tmp_path
+):
+    """A grouped key containing '.' is not a column path, and 'a.b' and
+    'a_b' must not share a group column: both land in the output map
+    under their raw names, as in the batch plan."""
+    import json as _json
+
+    from monasca_aggregator_spark.sources.envelope import read_envelope_json
+
+    src = tmp_path / "src"
+    src.mkdir()
+    rows = [
+        ({"a.b": "dot", "a_b": "underscore"}, 5_000, 3.0),
+        ({"a.b": "dot", "a_b": "other"}, 6_000, 4.0),
+    ]
+    (src / "e.jsonl").write_text(
+        "\n".join(
+            _json.dumps(
+                {
+                    "metric": {
+                        "name": "m",
+                        "dimensions": dims,
+                        "timestamp": float(ts),
+                        "value": value,
+                        "value_meta": {},
+                    },
+                    "meta": {"tenantId": "t0"},
+                    "creation_time": 0,
+                }
+            )
+            for dims, ts, value in rows
+        )
+    )
+    spec = AggregationSpec(
+        name="dotted",
+        aggregated_metric_name="agg.m.sum",
+        filtered_metric_name="m",
+        function="sum",
+        grouped_dimensions=("a.b", "a_b"),
+    )
+    env = read_envelope_json(spark, str(src), streaming=True)
+    q = (
+        build_streaming_aggregation(env, spec, 60, 0)
+        .writeStream.format("memory")
+        .queryName("dotted_keys")
+        .outputMode("complete")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = {
+        tuple(sorted(r.dimensions.items())): r.value
+        for r in spark.table("dotted_keys").collect()
+    }
+    assert got == {
+        (("a.b", "dot"), ("a_b", "other")): 4.0,
+        (("a.b", "dot"), ("a_b", "underscore")): 3.0,
+    }
 
 
 def test_streaming_plan_rejects_rollup(spark, sf_small):
@@ -237,24 +337,41 @@ SPEC_LATE = AggregationSpec(
 )
 
 
+def _with_region(env):
+    """Add a derived ``region`` dimension (r0 / r1 by user parity)."""
+    region = F.concat(
+        F.lit("r"),
+        F.pmod(F.col("dimensions")["user_id"].cast("int"), F.lit(2)).cast(
+            "string"
+        ),
+    )
+    return env.withColumn(
+        "dimensions",
+        F.map_concat("dimensions", F.create_map(F.lit("region"), region)),
+    )
+
+
 def test_streaming_rollup_foreachbatch_matches_batch(spark, sf_small):
     """Rollup on a stream (stage 2 in foreachBatch over finalized
     windows) ≡ the batch rollup plan, restricted to windows the
     watermark finalized (trailing windows stay unpublished — the
-    reference likewise withholds windows until lag passes)."""
+    reference likewise withholds windows until lag passes). The output
+    map keeps the filteredDimensions next to the rollup's grouped
+    dimension (reference: metric_holder.go:44-61)."""
     from monasca_aggregator_spark.models import Rollup
-    from monasca_aggregator_spark.streaming.pipeline import (
+    from monasca_aggregator_spark.operators.aggregate import (
+        matches_metric,
         run_stream_with_rollup,
     )
-    from pyspark.sql import functions as F
 
     spec = AggregationSpec(
         name="stream_rollup",
         aggregated_metric_name="agg.purchase.rollup",
         filtered_metric_name="purchase",
         function="avg",
-        grouped_dimensions=("user_id",),
-        rollup=Rollup(function="sum", grouped_dimensions=()),
+        filtered_dimensions={"region": "r0"},
+        grouped_dimensions=("user_id", "k"),
+        rollup=Rollup(function="sum", grouped_dimensions=("user_id",)),
     )
     window, lag = 3600, 120
 
@@ -269,19 +386,25 @@ def test_streaming_rollup_foreachbatch_matches_batch(spark, sf_small):
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif dict(raw.dtypes)["ts"] == "timestamp_ntz":
         raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    env_stream = events_to_envelopes(raw)
+    env_stream = _with_region(events_to_envelopes(raw))
 
     got = run_stream_with_rollup(spark, env_stream, spec, window, lag)
-    got_map = {r.window_ts_ms: r.value for r in got.collect()}
+    got_map = {_key(r): r.value for r in got.collect()}
 
-    env = events_to_envelopes(load_table(spark, sf_small, "events"))
+    env = _with_region(events_to_envelopes(load_table(spark, sf_small, "events")))
     batch = build_aggregation(env, spec, window)
-    max_ts_ms = env.select(F.max(F.unix_millis("timestamp"))).first()[0]
+    # the rule's filter sits below the watermark, so the watermark
+    # tracks the rule's own matched rows
+    max_ts_ms = (
+        env.filter(matches_metric(spec, F.col("name"), F.col("dimensions")))
+        .select(F.max(F.unix_millis("timestamp")))
+        .first()[0]
+    )
     watermark_ms = max_ts_ms - lag * 1000
     finalized = batch.filter(
         F.col("window_ts_ms") + window * 1000 <= watermark_ms
     )
-    want_map = {r.window_ts_ms: r.value for r in finalized.collect()}
+    want_map = {_key(r): r.value for r in finalized.collect()}
 
     assert got_map.keys() == want_map.keys()
     assert all(abs(got_map[k] - want_map[k]) < 1e-9 for k in want_map)
@@ -392,10 +515,8 @@ def test_continuous_topk_per_window_equals_batch(spark, sf_small):
     computation."""
     from pyspark.sql import Window as W
 
-    from monasca_aggregator_spark.streaming.pipeline import (
-        run_stream_with_publish,
-        topk_per_window,
-    )
+    from monasca_aggregator_spark.operators.aggregate import run_stream_with_publish
+    from monasca_aggregator_spark.streaming.pipeline import topk_per_window
 
     spec = AggregationSpec(
         name="k",
@@ -429,10 +550,6 @@ def test_continuous_topk_per_window_equals_batch(spark, sf_small):
     }
 
     # streamed: same stage-1 plan, top-k in foreachBatch at publish
-    from monasca_aggregator_spark.streaming.pipeline import (
-        build_streaming_aggregation,
-    )
-
     raw_schema = spark.read.parquet(f"{sf_small}/events.parquet").schema
     raw = (
         spark.readStream.schema(raw_schema)
@@ -796,7 +913,7 @@ def test_wallclock_heartbeat_finalizes_idle_stream(spark, tmp_path):
     import time as _time
 
     from monasca_aggregator_spark.sources.envelope import read_envelope_json
-    from monasca_aggregator_spark.streaming.pipeline import (
+    from monasca_aggregator_spark.operators.aggregate import (
         with_wallclock_heartbeat,
     )
 

@@ -33,15 +33,15 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from monasca_aggregator_spark.operators.aggregate import (
+        build_streaming_aggregation,
+    )
     from monasca_aggregator_spark.session import get_spark
     from monasca_aggregator_spark.sources.envelope import parse_envelopes
     from monasca_aggregator_spark.sources.loadgen_source import (
         EnvelopeLoadgenDataSource,
     )
     from monasca_aggregator_spark.specs import AggregationSpec
-    from monasca_aggregator_spark.streaming.pipeline import (
-        build_streaming_aggregation,
-    )
 
     spark = get_spark("stream-throughput")
     spark.dataSource.register(EnvelopeLoadgenDataSource)
