@@ -23,6 +23,7 @@ reference formats verbatim (config.py, specs.py).
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 
@@ -50,7 +51,13 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
         default=None,
         help="stop after this many seconds (default: run forever)",
     )
-    ap.add_argument("--cpus", type=int, default=None)
+    ap.add_argument(
+        "--cpus",
+        type=int,
+        default=None,
+        help="local cores (default: SPARK_GRAFT_CPUS, else the CPUs "
+        "this process may run on)",
+    )
     ap.add_argument(
         "--emit-sql",
         action="store_true",
@@ -65,6 +72,7 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
     from monasca_aggregator_spark.config import (
         EngineConfig,
         build_continuous_pipeline,
+        state_partitions,
     )
     from monasca_aggregator_spark.session import get_spark
     from monasca_aggregator_spark.specs import load_specs_from_yaml
@@ -80,7 +88,13 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
             print(spec_to_sql(spec, config.window_size_sec) + ";\n")
         return 0
 
-    spark = get_spark("monasca-aggregator", cpus=args.cpus)
+    # size to this machine: get_spark's own fallback is local[32]
+    cpus = (
+        args.cpus
+        or int(os.environ.get("SPARK_GRAFT_CPUS", 0))
+        or len(os.sched_getaffinity(0))
+    )
+    spark = get_spark("monasca-aggregator", cpus=cpus)
 
     source = sink = None
     if args.source_dir:
@@ -126,7 +140,8 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
     )
     print(
         f"started {len(queries)} aggregation rule(s); "
-        f"window={config.window_size_sec}s lag={config.window_lag_sec}s",
+        f"window={config.window_size_sec}s lag={config.window_lag_sec}s "
+        f"state_partitions={state_partitions(spark, len(specs))}/rule",
         file=sys.stderr,
     )
     try:

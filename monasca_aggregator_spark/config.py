@@ -79,6 +79,15 @@ class EngineConfig:
             return cls.from_dict(yaml.safe_load(f) or {})
 
 
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def state_partitions(spark, n_rules: int) -> int:
+    """State partitions for each of ``n_rules`` new rule queries: the
+    session's cores shared out among the rules, at least one each."""
+    return max(1, spark.sparkContext.defaultParallelism // max(1, n_rules))
+
+
 def build_continuous_pipeline(
     spark,
     config: EngineConfig,
@@ -94,6 +103,17 @@ def build_continuous_pipeline(
     (one per rule — independent state stores and output topics keep one
     hot rule from stalling the rest; reference runs them in one loop,
     server.go:306-310).
+
+    Each rule query starts with ``state_partitions(spark, len(specs))``
+    state partitions, about one state store per core across the
+    queries: every store writes its own delta and checksum files on
+    every micro-batch, and that per-store cost, not the data, bounds a
+    small daemon's trigger time. Partial aggregation still runs on every
+    input partition before the shuffle. Spark keeps the count in a
+    query's checkpoint and restores it on restart, so adding or removing
+    rules later leaves existing checkpoints' layout alone. The session's
+    own ``spark.sql.shuffle.partitions`` is put back afterwards, also
+    when starting a query raises.
 
     ``source``/``sink`` default to the Kafka edges (needs a broker +
     connector); inject alternatives to run the SAME composition
@@ -138,20 +158,27 @@ def build_continuous_pipeline(
         # true consumed-envelope count (ticks are not messages)
         env = with_wallclock_heartbeat(env, spark)
     queries = []
-    for spec in specs:
-        plan = build_streaming_aggregation(
-            env, spec, config.window_size_sec, config.window_lag_sec
-        )
-        plan, _ = count_edge(plan, OUT_METRIC, streaming=True)
-        if sink is not None:
-            queries.append(sink(plan, spec))
-        else:
-            queries.append(
-                write_envelope_stream(
-                    plan,
-                    config.bootstrap_servers,
-                    config.producer_topic,
-                    checkpoint_dir=f"{checkpoint_dir}/{spec.name}",
-                )
+    # a query copies the session conf when it starts, so the sized
+    # value only has to hold while the rule queries start
+    previous = spark.conf.get(SHUFFLE_PARTITIONS)
+    spark.conf.set(SHUFFLE_PARTITIONS, str(state_partitions(spark, len(specs))))
+    try:
+        for spec in specs:
+            plan = build_streaming_aggregation(
+                env, spec, config.window_size_sec, config.window_lag_sec
             )
+            plan, _ = count_edge(plan, OUT_METRIC, streaming=True)
+            if sink is not None:
+                queries.append(sink(plan, spec))
+            else:
+                queries.append(
+                    write_envelope_stream(
+                        plan,
+                        config.bootstrap_servers,
+                        config.producer_topic,
+                        checkpoint_dir=f"{checkpoint_dir}/{spec.name}",
+                    )
+                )
+    finally:
+        spark.conf.set(SHUFFLE_PARTITIONS, previous)
     return queries

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from monasca_aggregator_spark.config import DEFAULTS, EngineConfig
 
 
@@ -153,3 +155,194 @@ def test_continuous_pipeline_composition_brokerless(spark, sf_small, tmp_path):
     assert spark.table("cp_r1").count() > 0
     assert observed.get(IN_METRIC, 0) > 0
     assert observed.get(OUT_METRIC, 0) > 0
+
+
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+def _envelope_lines(rows):
+    """(metric name, host, event time in s, value) → envelope JSON lines."""
+    return "\n".join(
+        json.dumps(
+            {
+                "metric": {
+                    "name": name,
+                    "dimensions": {"host": host},
+                    "timestamp": 1000.0 * t,
+                    "value": value,
+                    "value_meta": {},
+                },
+                "meta": {"tenantId": "t0"},
+                "creation_time": 0,
+            }
+        )
+        for name, host, t, value in rows
+    ) + "\n"
+
+
+def _sum_rule(name):
+    from monasca_aggregator_spark.models import AggregationSpec
+
+    return AggregationSpec(
+        name=name,
+        aggregated_metric_name="m.sum",
+        filtered_metric_name="m",
+        function="sum",
+        grouped_dimensions=("host",),
+    )
+
+
+def _drain_rules(spark, names, src, out):
+    """``build_continuous_pipeline`` over the envelope files in ``src``,
+    one parquet sink and checkpoint per rule under ``out``, drained
+    with availableNow."""
+    from monasca_aggregator_spark.config import (
+        EngineConfig,
+        build_continuous_pipeline,
+    )
+    from monasca_aggregator_spark.sources.envelope import read_envelope_json
+
+    cfg = EngineConfig.from_dict(
+        {"windowSize": 10, "windowLag": 2, "heartbeat": False}
+    )
+
+    def sink(plan, spec):
+        return (
+            plan.writeStream.format("parquet")
+            .option("path", f"{out}/{spec.name}")
+            .option("checkpointLocation", f"{out}/ckpt/{spec.name}")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    queries = build_continuous_pipeline(
+        spark,
+        cfg,
+        [_sum_rule(n) for n in names],
+        checkpoint_dir=f"{out}/ckpt",
+        source=lambda: read_envelope_json(spark, str(src), streaming=True),
+        sink=sink,
+    )
+    for q in queries:
+        q.awaitTermination()
+
+
+def _recorded_partitions(out, name, batch=0):
+    """The shuffle-partition count a rule query's offset log recorded
+    for ``batch`` (line 2 of the log entry is the batch metadata)."""
+    entry = (out / "ckpt" / name / "offsets" / str(batch)).read_text()
+    return int(json.loads(entry.splitlines()[1])["conf"][SHUFFLE])
+
+
+def test_rule_queries_share_the_cores_as_state_partitions(spark, tmp_path):
+    """Each rule query starts with max(1, cores // rules) state
+    partitions: all the cores for one rule, one each when there are
+    more rules than cores; the session's own setting is left as it
+    was."""
+    cores = spark.sparkContext.defaultParallelism
+    before = spark.conf.get(SHUFFLE)
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.jsonl").write_text(
+        _envelope_lines([("m", "h0", 1, 1.0), ("m", "h1", 15, 2.0)])
+    )
+    for n_rules, expected in ((1, cores), (cores + 1, 1)):
+        out = tmp_path / f"n{n_rules}"
+        names = [f"r{i}" for i in range(n_rules)]
+        _drain_rules(spark, names, src, out)
+        assert [_recorded_partitions(out, n) for n in names] == [
+            expected
+        ] * n_rules
+        assert spark.conf.get(SHUFFLE) == before
+
+
+def test_session_partitions_restored_when_a_sink_raises(spark, tmp_path):
+    from monasca_aggregator_spark.config import (
+        EngineConfig,
+        build_continuous_pipeline,
+    )
+    from monasca_aggregator_spark.sources.envelope import read_envelope_json
+
+    cores = spark.sparkContext.defaultParallelism
+    before = spark.conf.get(SHUFFLE)
+    seen = []
+
+    def sink(plan, spec):
+        seen.append(spark.conf.get(SHUFFLE))
+        if len(seen) == 2:
+            raise RuntimeError("sink failed")
+
+    with pytest.raises(RuntimeError, match="sink failed"):
+        build_continuous_pipeline(
+            spark,
+            EngineConfig.from_dict({"heartbeat": False}),
+            [_sum_rule(f"r{i}") for i in range(3)],
+            checkpoint_dir=str(tmp_path),
+            source=lambda: read_envelope_json(
+                spark, str(tmp_path), streaming=True
+            ),
+            sink=sink,
+        )
+    assert seen == [str(max(1, cores // 3))] * 2
+    assert spark.conf.get(SHUFFLE) == before
+
+
+def test_restart_keeps_the_checkpointed_partition_count(spark, tmp_path):
+    """A rule started alone gets every core as a state partition; when
+    it restarts from its checkpoint beside more rules than cores, Spark
+    restores that count, its open window's state carries over, and the
+    committed output equals the batch plan with each window once."""
+    from monasca_aggregator_spark.operators.aggregate import build_aggregation
+    from monasca_aggregator_spark.sources.envelope import read_envelope_json
+
+    cores = spark.sparkContext.defaultParallelism
+    src = tmp_path / "src"
+    out = tmp_path / "out"
+    src.mkdir()
+    # 10 s windows, 2 s lag: the first drain publishes [0,10) and
+    # [10,20) and keeps [20,30) open in state across the restart
+    (src / "a.jsonl").write_text(
+        _envelope_lines(
+            [("m", f"h{i % 2}", t, float(t)) for i, t in enumerate(range(1, 26, 3))]
+        )
+    )
+    _drain_rules(spark, ["kept"], src, out)
+    assert _recorded_partitions(out, "kept") == cores
+    # a far-future envelope moves the watermark past every earlier
+    # window, so the second drain publishes them all; its own window
+    # never closes. (It has to match the rule: the rule's filter runs
+    # below the watermark.)
+    (src / "b.jsonl").write_text(
+        _envelope_lines(
+            [("m", f"h{i % 2}", t, float(t)) for i, t in enumerate(range(26, 46, 3))]
+            + [("m", "h0", 1000, 0.0)]
+        )
+    )
+    new = [f"new{i}" for i in range(cores)]
+    _drain_rules(spark, ["kept", *new], src, out)
+
+    batches = sorted(
+        int(p.name) for p in (out / "ckpt" / "kept" / "offsets").iterdir()
+        if p.name.isdigit()
+    )
+    assert len(batches) > 2, "the restart ran no batch"
+    assert {_recorded_partitions(out, "kept", b) for b in batches} == {cores}
+    assert {_recorded_partitions(out, n) for n in new} == {1}
+
+    def key(r):
+        return (r.window_ts_ms, r.tenant_id, tuple(sorted(r.dimensions.items())))
+
+    expected = {
+        key(r): r.value
+        for r in build_aggregation(
+            read_envelope_json(spark, str(src)), _sum_rule("kept"), 10
+        ).collect()
+        if r.window_ts_ms < 1_000_000
+    }
+    assert len(expected) == 10  # five windows x two hosts
+    for name in ["kept", *new]:
+        rows = spark.read.parquet(str(out / name)).collect()
+        got = {key(r): r.value for r in rows}
+        assert len(rows) == len(got), f"{name}: a window was emitted twice"
+        assert got == expected, name

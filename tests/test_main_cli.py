@@ -48,7 +48,43 @@ def test_cli_requires_paired_source_sink(tmp_path):
         )
 
 
-def test_cli_file_mode_end_to_end(spark, tmp_path):
+def test_cli_sizes_the_session_to_the_machine(tmp_path, monkeypatch):
+    """Cores come from --cpus, then SPARK_GRAFT_CPUS, then the CPUs the
+    process may run on — never get_spark's local[32] fallback."""
+    import os
+
+    from monasca_aggregator_spark import session
+    from monasca_aggregator_spark.__main__ import main
+
+    class Sized(Exception):
+        pass
+
+    def get_spark(app_name, *, cpus=None):
+        raise Sized(cpus)
+
+    monkeypatch.setattr(session, "get_spark", get_spark)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    _write_yaml_files(tmp_path)
+    argv = [
+        "--config", str(tmp_path / "config.yaml"),
+        "--specs", str(tmp_path / "specs.yaml"),
+    ]
+
+    def cpus_for(extra, env):
+        if env is None:
+            monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        else:
+            monkeypatch.setenv("SPARK_GRAFT_CPUS", env)
+        with pytest.raises(Sized) as e:
+            main(argv + extra)
+        return e.value.args[0]
+
+    assert cpus_for(["--cpus", "2"], "5") == 2
+    assert cpus_for([], "5") == 5
+    assert cpus_for([], None) == 3
+
+
+def test_cli_file_mode_end_to_end(spark, tmp_path, capsys):
     import sys
 
     sys.path.insert(0, "tools")
@@ -81,6 +117,9 @@ def test_cli_file_mode_end_to_end(spark, tmp_path):
         stop_session=False,
     )
     assert rc == 0
+    # one rule on the shared local[8] session: every core is a state
+    # partition
+    assert "state_partitions=8/rule" in capsys.readouterr().err
 
     # Read the sink through its _spark_metadata commit log, not a raw
     # glob: a bounded-run stop can abort an in-flight batch whose
