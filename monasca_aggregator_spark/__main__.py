@@ -98,20 +98,13 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
 
     source = sink = None
     if args.source_dir:
-        from pyspark.sql import functions as F
-
         from monasca_aggregator_spark.sources.envelope import (
-            parse_envelopes,
+            read_envelope_json,
         )
         from monasca_aggregator_spark.sources.kafka import envelopes_to_json
 
         def source():
-            raw = (
-                spark.readStream.format("text")
-                .load(args.source_dir)
-                .select(F.col("value"))
-            )
-            return parse_envelopes(raw)
+            return read_envelope_json(spark, args.source_dir, streaming=True)
 
         def sink(plan, spec):
             return (

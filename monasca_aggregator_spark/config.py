@@ -98,7 +98,7 @@ def build_continuous_pipeline(
     sink=None,
 ):
     """The reference's whole runtime as one call: Kafka envelopes in →
-    every (non-rollup) rule's watermarked windowed aggregation →
+    every rule's watermarked windowed aggregation (and rollup) →
     envelope JSON back to Kafka. Returns the started StreamingQueries
     (one per rule — independent state stores and output topics keep one
     hot rule from stalling the rest; reference runs them in one loop,

@@ -17,16 +17,17 @@ rollup stage re-shuffles the already-aggregated (small) output.
 Each step of that shape is defined once here — the predicate
 (``matches_metric``), the group keys (``_group_keys``), the function
 table (``_AGG_EXPRS``), the output-dims map (``_output``) and the rollup
-stage (``_rollup``) — and three plans read from them:
+stage (``_rollup``) — and two plans read from them:
 
 - ``build_aggregation``: the batch plan (backfill, catalog queries);
 - ``build_streaming_aggregation``: the continuous plan, which adds only
   what streaming needs — the watermark (reference windowLag,
   server.go:215), Spark's epoch-aligned ``F.window`` key (reference
   windowSize, server.go:213-233), and the heartbeat conjunct that lets
-  quiet topics publish (``with_wallclock_heartbeat``);
-- ``run_stream_with_rollup``: the continuous plan's finalized windows
-  re-aggregated per micro-batch by the same rollup stage.
+  quiet topics publish (``with_wallclock_heartbeat``). A rollup is a
+  second append-mode aggregation grouped by the first one's window
+  struct, so it sees each window once, when the watermark finalizes
+  it — when the reference rolls up (aggregation_rule.go:88-136).
 
 Batch ≡ streaming therefore holds by construction;
 tests/test_streaming.py asserts it empirically. ``sql_compile`` renders
@@ -187,20 +188,22 @@ def _output(
     )
 
 
-def _rollup(first: DataFrame, spec: AggregationSpec) -> DataFrame:
-    """Second stage over the rollup's subset keys. Input is the first
-    stage's (window_ts_ms, tenant_id, grouped values, value), so event
-    time is the window start, constant per group: delta degenerates to
-    0 and rate to NULL, mirroring the reference's re-run of the metric
-    holders on aggregated envelopes (aggregation_rule.go:104-125)."""
+def _rollup(
+    first: DataFrame, spec: AggregationSpec, window: Column, window_ts: Column
+) -> DataFrame:
+    """Second stage over the rollup's subset keys, grouped by the first
+    stage's ``window`` column; ``window_ts`` is that window's start in
+    ms. Event time is the window start, constant per group: delta
+    degenerates to 0 and rate to NULL, mirroring the reference's re-run
+    of the metric holders on aggregated envelopes
+    (aggregation_rule.go:104-125)."""
     rollup = spec.rollup
-    roll_ts = F.col("window_ts_ms")
-    value = _AGG_EXPRS[rollup.function](F.col("value"), roll_ts, roll_ts)
+    value = _AGG_EXPRS[rollup.function](F.col("value"), window_ts, window_ts)
     keys = [F.col(_ident(k)) for k in rollup.grouped_dimensions]
-    out = first.groupBy(roll_ts, F.col("tenant_id"), *keys).agg(
+    out = first.groupBy(window, F.col("tenant_id"), *keys).agg(
         value.alias("value")
     )
-    return _output(out, roll_ts, spec, rollup.grouped_dimensions)
+    return _output(out, window_ts, spec, rollup.grouped_dimensions)
 
 
 def build_aggregation(
@@ -233,7 +236,8 @@ def build_aggregation(
         matched, window_ts.alias("window_ts_ms"), spec, order=order
     )
     if spec.rollup is not None:
-        return _rollup(out, spec)
+        window_ts = F.col("window_ts_ms")
+        return _rollup(out, spec, window_ts, window_ts)
     return _output(out, F.col("window_ts_ms"), spec, spec.grouped_dimensions)
 
 
@@ -282,11 +286,19 @@ def with_wallclock_heartbeat(env: DataFrame, spark: SparkSession) -> DataFrame:
     return env.unionByName(hb.select(*exprs))
 
 
-def _streaming_stage(
-    df: DataFrame, spec: AggregationSpec, window_size_sec: int, lag_sec: int
+def build_streaming_aggregation(
+    df: DataFrame,
+    spec: AggregationSpec,
+    window_size_sec: int,
+    lag_sec: int,
 ) -> DataFrame:
-    """The first stage as a watermarked streaming aggregation, keyed by
-    the ``F.window`` struct ``w``; heartbeat groups already dropped."""
+    """Streaming plan for one rule, rollup included.
+
+    Same output schema as the batch ``build_aggregation``:
+    window_ts_ms, tenant_id, name, dimensions, value. Run it in append
+    mode: each window is emitted once, after the watermark passes its
+    end.
+    """
     if dict(df.dtypes).get("timestamp") == "timestamp_ntz":
         # withWatermark requires TIMESTAMP (with timezone); parquet file
         # sources may surface event time as TIMESTAMP_NTZ depending on
@@ -305,67 +317,15 @@ def _streaming_stage(
     window = F.window(F.col("timestamp"), f"{window_size_sec} seconds")
     # streaming is consume-order by nature; the deterministic event-time
     # ordering doubles as the arrival order under watermark replay
-    return _aggregate(
+    out = _aggregate(
         matched, window.alias("w"), spec, F.max(is_hb).alias("__hb")
     ).filter(F.col("__hb") == F.lit(False))
-
-
-def build_streaming_aggregation(
-    df: DataFrame,
-    spec: AggregationSpec,
-    window_size_sec: int,
-    lag_sec: int,
-) -> DataFrame:
-    """Streaming-safe single-stage aggregation plan.
-
-    Same output schema as the batch ``build_aggregation`` (minus
-    rollup): window_ts_ms, tenant_id, name, dimensions, value.
-    """
-    if spec.rollup is not None:
-        raise ValueError(
-            "rollup is a second stateful aggregation: run it in "
-            "foreachBatch on this plan's output"
-        )
-    out = _streaming_stage(df, spec, window_size_sec, lag_sec)
     window_ts = F.unix_millis(F.col("w.start")).alias("window_ts_ms")
+    if spec.rollup is not None:
+        # the window struct carries the event-time metadata, so Spark
+        # chains this second aggregation in append mode
+        return _rollup(out, spec, F.col("w"), window_ts)
     return _output(out, window_ts, spec, spec.grouped_dimensions)
-
-
-def run_stream_with_rollup(
-    spark: SparkSession,
-    env_stream: DataFrame,
-    spec: AggregationSpec,
-    window_size_sec: int,
-    lag_sec: int,
-    *,
-    query_name: str = "rollup_stream",
-    sink=None,
-) -> DataFrame:
-    """Rollup rule on a stream: stage 1 is the watermarked windowed
-    aggregation; stage 2 (the rollup re-aggregation) runs per
-    micro-batch in ``foreachBatch`` over stage 1's FINALIZED windows —
-    exactly when the reference rolls up (at publish time,
-    aggregation_rule.go:88-136). Append mode guarantees each window
-    reaches foreachBatch once, so re-aggregating the batch is correct
-    without cross-batch state.
-
-    ``sink(rolled_df, batch_id)`` receives each batch's rollup output;
-    in production point it at a distributed write (Kafka/parquet) —
-    rollup output never needs to touch the driver. The default sink
-    collects into the returned DataFrame (test/driver-verification
-    convenience; rollup outputs are per-window aggregates, small by
-    construction). Runs with availableNow and returns after the stream
-    drains.
-    """
-    if spec.rollup is None:
-        raise ValueError("spec has no rollup stage")
-    first = _streaming_stage(
-        env_stream, spec, window_size_sec, lag_sec
-    ).withColumn("window_ts_ms", F.unix_millis(F.col("w.start")))
-    return run_stream_with_publish(
-        spark, first, lambda batch: _rollup(batch, spec), sink=sink,
-        query_name=query_name,
-    )
 
 
 def run_stream_with_publish(
@@ -381,7 +341,7 @@ def run_stream_with_publish(
 
     Append mode guarantees each window reaches the transform exactly
     once (after the watermark passes), so any batch-correct transform
-    — rollup, per-window top-k, alerting joins — is streaming-correct
+    — per-window top-k, alerting joins — is streaming-correct
     here with no cross-batch state. ``sink(df, batch_id)`` defaults to
     collecting into the returned DataFrame (tests); in production
     point it at a distributed write.

@@ -127,12 +127,12 @@ def write_envelope_stream(
     topic: str,
     *,
     checkpoint_dir: str,
-    output_mode: str = "append",
 ):
     """writeStream of an aggregation plan's output to Kafka.
 
-    Append mode + watermark = emit each window once, when finalized —
-    the reference's publish-at-lag semantics (server.go:213-296).
+    Always append mode: with the watermark it emits each window once,
+    when finalized — the reference's publish-at-lag semantics
+    (server.go:213-296).
     Returns the started StreamingQuery.
     """
     writer = envelopes_to_json(aggregated).writeStream.format("kafka")
@@ -140,4 +140,4 @@ def write_envelope_stream(
         bootstrap_servers, topic, checkpoint_dir=checkpoint_dir
     ).items():
         writer = writer.option(k, v)
-    return writer.outputMode(output_mode).start()
+    return writer.outputMode("append").start()

@@ -40,7 +40,15 @@ def load_specs(doc: dict[str, Any] | list[dict[str, Any]]) -> list[AggregationSp
             raise SpecError("document missing 'aggregationSpecifications'")
     else:
         raw_list = doc
-    return [_spec_from_dict(raw) for raw in raw_list]
+    specs = [_spec_from_dict(raw) for raw in raw_list]
+    # the daemon keys each rule's checkpoint and sink path by its name:
+    # two rules sharing one would stop each other's query
+    seen = set()
+    for spec in specs:
+        if spec.name in seen:
+            raise SpecError(f"duplicate rule name {spec.name!r}")
+        seen.add(spec.name)
+    return specs
 
 
 def load_specs_from_yaml(path: str) -> list[AggregationSpec]:

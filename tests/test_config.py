@@ -192,23 +192,39 @@ def _sum_rule(name):
     )
 
 
-def _drain_rules(spark, names, src, out):
+def _rollup_rule(name):
+    from monasca_aggregator_spark.models import AggregationSpec, Rollup
+
+    return AggregationSpec(
+        name=name,
+        aggregated_metric_name="m.max.sum",
+        filtered_metric_name="m",
+        function="max",
+        grouped_dimensions=("host",),
+        rollup=Rollup(function="sum", grouped_dimensions=()),
+    )
+
+
+def _drain_rules(spark, specs, src, out, fmt="parquet"):
     """``build_continuous_pipeline`` over the envelope files in ``src``,
-    one parquet sink and checkpoint per rule under ``out``, drained
-    with availableNow."""
+    one sink (parquet, or envelope JSON text as the CLI writes it) and
+    checkpoint per rule under ``out``, drained with availableNow."""
     from monasca_aggregator_spark.config import (
         EngineConfig,
         build_continuous_pipeline,
     )
     from monasca_aggregator_spark.sources.envelope import read_envelope_json
+    from monasca_aggregator_spark.sources.kafka import envelopes_to_json
 
     cfg = EngineConfig.from_dict(
         {"windowSize": 10, "windowLag": 2, "heartbeat": False}
     )
 
     def sink(plan, spec):
+        if fmt == "text":
+            plan = envelopes_to_json(plan).select("value")
         return (
-            plan.writeStream.format("parquet")
+            plan.writeStream.format(fmt)
             .option("path", f"{out}/{spec.name}")
             .option("checkpointLocation", f"{out}/ckpt/{spec.name}")
             .outputMode("append")
@@ -219,7 +235,7 @@ def _drain_rules(spark, names, src, out):
     queries = build_continuous_pipeline(
         spark,
         cfg,
-        [_sum_rule(n) for n in names],
+        specs,
         checkpoint_dir=f"{out}/ckpt",
         source=lambda: read_envelope_json(spark, str(src), streaming=True),
         sink=sink,
@@ -250,7 +266,7 @@ def test_rule_queries_share_the_cores_as_state_partitions(spark, tmp_path):
     for n_rules, expected in ((1, cores), (cores + 1, 1)):
         out = tmp_path / f"n{n_rules}"
         names = [f"r{i}" for i in range(n_rules)]
-        _drain_rules(spark, names, src, out)
+        _drain_rules(spark, [_sum_rule(n) for n in names], src, out)
         assert [_recorded_partitions(out, n) for n in names] == [
             expected
         ] * n_rules
@@ -307,7 +323,7 @@ def test_restart_keeps_the_checkpointed_partition_count(spark, tmp_path):
             [("m", f"h{i % 2}", t, float(t)) for i, t in enumerate(range(1, 26, 3))]
         )
     )
-    _drain_rules(spark, ["kept"], src, out)
+    _drain_rules(spark, [_sum_rule("kept")], src, out)
     assert _recorded_partitions(out, "kept") == cores
     # a far-future envelope moves the watermark past every earlier
     # window, so the second drain publishes them all; its own window
@@ -320,7 +336,7 @@ def test_restart_keeps_the_checkpointed_partition_count(spark, tmp_path):
         )
     )
     new = [f"new{i}" for i in range(cores)]
-    _drain_rules(spark, ["kept", *new], src, out)
+    _drain_rules(spark, [_sum_rule(n) for n in ["kept", *new]], src, out)
 
     batches = sorted(
         int(p.name) for p in (out / "ckpt" / "kept" / "offsets").iterdir()
@@ -346,3 +362,69 @@ def test_restart_keeps_the_checkpointed_partition_count(spark, tmp_path):
         got = {key(r): r.value for r in rows}
         assert len(rows) == len(got), f"{name}: a window was emitted twice"
         assert got == expected, name
+
+
+def test_rollup_rule_runs_beside_a_plain_rule_across_a_restart(spark, tmp_path):
+    """A rollup rule runs in build_continuous_pipeline beside a plain
+    rule. Each rule's committed output equals build_aggregation on the
+    finalized windows, each (window, tenant, dims) once: after the
+    first drain, and after both queries restart from their
+    checkpoints with a window's first-stage state still open."""
+    from pyspark.sql import functions as F
+
+    from monasca_aggregator_spark.operators.aggregate import build_aggregation
+    from monasca_aggregator_spark.sources.envelope import read_envelope_json
+
+    src = tmp_path / "src"
+    out = tmp_path / "out"
+    src.mkdir()
+    specs = [_sum_rule("plain"), _rollup_rule("rolled")]
+
+    def key(r):
+        return (r.window_ts_ms, r.tenant_id, tuple(sorted(r.dimensions.items())))
+
+    def committed(name):
+        rows = (
+            read_envelope_json(spark, str(out / name))
+            .withColumn("window_ts_ms", F.unix_millis("timestamp"))
+            .collect()
+        )
+        got = {key(r): r.value for r in rows}
+        assert len(rows) == len(got), f"{name}: a window was emitted twice"
+        return got
+
+    def expected(spec, before_ms):
+        return {
+            key(r): r.value
+            for r in build_aggregation(
+                read_envelope_json(spark, str(src)), spec, 10
+            ).collect()
+            if r.window_ts_ms + 10_000 <= before_ms
+        }
+
+    # 10 s windows, 2 s lag: the watermark reaches 25 - 2 = 23 s, so the
+    # first drain publishes [0,10) and [10,20) and keeps [20,30) open
+    (src / "a.jsonl").write_text(
+        _envelope_lines(
+            [("m", f"h{i % 2}", t, float(t)) for i, t in enumerate(range(1, 26, 3))]
+        )
+    )
+    _drain_rules(spark, specs, src, out, fmt="text")
+    for spec in specs:
+        want = expected(spec, 23_000)
+        assert len(want) == (4 if spec.rollup is None else 2)
+        assert committed(spec.name) == want, spec.name
+
+    # a far-future envelope moves the watermark past every earlier
+    # window; its own window never closes
+    (src / "b.jsonl").write_text(
+        _envelope_lines(
+            [("m", f"h{i % 2}", t, float(t)) for i, t in enumerate(range(26, 46, 3))]
+            + [("m", "h0", 1000, 0.0)]
+        )
+    )
+    _drain_rules(spark, specs, src, out, fmt="text")
+    for spec in specs:
+        want = expected(spec, 1_000_000)
+        assert len(want) == (10 if spec.rollup is None else 5)
+        assert committed(spec.name) == want, spec.name

@@ -90,6 +90,20 @@ def test_load_specs_missing_key():
         load_specs({"wrongKey": []})
 
 
+def test_load_specs_rejects_duplicate_names():
+    # a rule's name keys its checkpoint and sink path in the daemon
+    rule = {
+        "aggregatedMetricName": "agg.m",
+        "filteredMetricName": "m",
+        "function": "sum",
+    }
+    with pytest.raises(SpecError, match="duplicate rule name 'same'"):
+        load_specs(
+            [{"name": "same", **rule}, {"name": "other", **rule},
+             {"name": "same", **rule}]
+        )
+
+
 def test_reference_example_rules_run_end_to_end(spark, tmp_path, sf_small):
     """A specifications file shaped like the reference's own examples
     (count / filtered sum / grouped avg / rollup / reject-any) loads and

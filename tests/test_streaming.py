@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from monasca_aggregator_spark.models import AggregationSpec
+from monasca_aggregator_spark.models import AggregationSpec, Rollup
 from monasca_aggregator_spark.operators.aggregate import (
     build_aggregation,
     build_streaming_aggregation,
@@ -144,22 +144,6 @@ def test_streaming_dotted_and_underscored_group_keys_stay_distinct(
         (("a.b", "dot"), ("a_b", "other")): 4.0,
         (("a.b", "dot"), ("a_b", "underscore")): 3.0,
     }
-
-
-def test_streaming_plan_rejects_rollup(spark, sf_small):
-    spec = AggregationSpec(
-        name="r",
-        aggregated_metric_name="a",
-        filtered_metric_name="m",
-        function="sum",
-        grouped_dimensions=("host",),
-        rollup=__import__(
-            "monasca_aggregator_spark.models", fromlist=["Rollup"]
-        ).Rollup(function="max", grouped_dimensions=()),
-    )
-    env = events_to_envelopes(load_table(spark, sf_small, "events"))
-    with pytest.raises(ValueError, match="foreachBatch"):
-        build_streaming_aggregation(env, spec, 3600, 120)
 
 
 def test_watermark_set_on_streaming_plan(spark, sf_small):
@@ -351,18 +335,15 @@ def _with_region(env):
     )
 
 
-def test_streaming_rollup_foreachbatch_matches_batch(spark, sf_small):
-    """Rollup on a stream (stage 2 in foreachBatch over finalized
-    windows) ≡ the batch rollup plan, restricted to windows the
-    watermark finalized (trailing windows stay unpublished — the
-    reference likewise withholds windows until lag passes). The output
-    map keeps the filteredDimensions next to the rollup's grouped
-    dimension (reference: metric_holder.go:44-61)."""
-    from monasca_aggregator_spark.models import Rollup
-    from monasca_aggregator_spark.operators.aggregate import (
-        matches_metric,
-        run_stream_with_rollup,
-    )
+def test_streaming_rollup_matches_batch(spark, sf_small, tmp_path):
+    """Rollup on a stream (stage 2 a second append-mode aggregation over
+    stage 1's finalized windows) ≡ the batch rollup plan, restricted to
+    windows the watermark finalized (trailing windows stay unpublished —
+    the reference likewise withholds windows until lag passes), each
+    (window, tenant, dims) emitted once. The output map keeps the
+    filteredDimensions next to the rollup's grouped dimension
+    (reference: metric_holder.go:44-61)."""
+    from monasca_aggregator_spark.operators.aggregate import matches_metric
 
     spec = AggregationSpec(
         name="stream_rollup",
@@ -388,8 +369,19 @@ def test_streaming_rollup_foreachbatch_matches_batch(spark, sf_small):
         raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
     env_stream = _with_region(events_to_envelopes(raw))
 
-    got = run_stream_with_rollup(spark, env_stream, spec, window, lag)
-    got_map = {_key(r): r.value for r in got.collect()}
+    q = (
+        build_streaming_aggregation(env_stream, spec, window, lag)
+        .writeStream.format("memory")
+        .queryName("stream_rollup")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = spark.table("stream_rollup").collect()
+    got_map = {_key(r): r.value for r in got}
+    assert len(got) == len(got_map), "a rollup window was emitted twice"
 
     env = _with_region(events_to_envelopes(load_table(spark, sf_small, "events")))
     batch = build_aggregation(env, spec, window)
@@ -947,31 +939,39 @@ def test_wallclock_heartbeat_finalizes_idle_stream(spark, tmp_path):
             ]
         )
     )
-    env = read_envelope_json(spark, str(src), streaming=True)
-    plan = build_streaming_aggregation(
-        with_wallclock_heartbeat(env, spark), SPEC_HB, 60, 30
+    env = with_wallclock_heartbeat(
+        read_envelope_json(spark, str(src), streaming=True), spark
     )
-    q = (
-        plan.writeStream.format("memory")
-        .queryName("hb_test")
+    # a rollup rule runs beside the plain one on the same source: its
+    # second stage must finalize on the heartbeat too
+    queries = [
+        build_streaming_aggregation(env, spec, 60, 30)
+        .writeStream.format("memory")
+        .queryName(name)
         .outputMode("append")
         .trigger(processingTime="1 second")
-        .option("checkpointLocation", str(tmp_path / "hb_ckpt"))
+        .option("checkpointLocation", str(tmp_path / name))
         .start()
-    )
+        for name, spec in (("hb_test", SPEC_HB), ("hb_rollup", SPEC_HB_ROLLUP))
+    ]
     try:
         deadline = _time.time() + 90
-        rows = []
+        rows = {}
         while _time.time() < deadline:
-            rows = spark.table("hb_test").collect()
-            if len(rows) >= 2:
+            rows = {
+                name: spark.table(name).collect()
+                for name in ("hb_test", "hb_rollup")
+            }
+            if all(len(r) >= 2 for r in rows.values()):
                 break
             _time.sleep(2)
         # both windows published despite the stream being idle; values
         # prove heartbeat rows contributed nothing to the aggregates
-        assert sorted(r.value for r in rows) == [3.0, 5.0]
+        assert sorted(r.value for r in rows["hb_test"]) == [3.0, 5.0]
+        assert sorted(r.value for r in rows["hb_rollup"]) == [2.0, 5.0]
     finally:
-        q.stop()
+        for q in queries:
+            q.stop()
 
 
 SPEC_HB = AggregationSpec(
@@ -980,6 +980,15 @@ SPEC_HB = AggregationSpec(
     filtered_metric_name="click",
     function="sum",
     grouped_dimensions=(),
+)
+
+SPEC_HB_ROLLUP = AggregationSpec(
+    name="hb_rollup",
+    aggregated_metric_name="agg.click.max.sum.hb",
+    filtered_metric_name="click",
+    function="max",
+    grouped_dimensions=("host",),
+    rollup=Rollup(function="sum", grouped_dimensions=()),
 )
 
 
