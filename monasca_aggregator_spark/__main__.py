@@ -146,15 +146,14 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
         else:
             spark.streams.awaitAnyTermination()
     finally:
-        for q in queries:
-            _drain_and_stop(q)
+        _drain_and_stop(queries)
         if stop_session:
             spark.stop()
     return 0
 
 
-def _drain_and_stop(q, grace_sec: float = 60.0) -> None:
-    """Stop a rule query BETWEEN micro-batches.
+def _drain_and_stop(queries, grace_sec: float = 60.0) -> None:
+    """Stop the rule queries BETWEEN micro-batches.
 
     ``q.stop()`` interrupts the stream-execution thread; if a
     ``FileStreamSink.addBatch`` is in flight the interrupt aborts it,
@@ -164,26 +163,37 @@ def _drain_and_stop(q, grace_sec: float = 60.0) -> None:
     publish-then-commit (server.go:222-258): readers never observe
     output that wasn't committed.  Honor it by waiting for the
     current trigger to go idle before stopping, so the final batch
-    either commits fully or never starts.  ``grace_sec`` bounds the
-    wait; a wedged batch still gets hard-stopped rather than hanging
-    shutdown forever.
+    either commits fully or never starts.  Each query stops as soon as
+    it is idle; ``grace_sec`` is one deadline shared by all of them, so
+    a busy or wedged batch gets hard-stopped at the deadline rather
+    than hanging shutdown, however many rules are running.
     """
     import time
 
-    t_end = time.time() + grace_sec
-    while time.time() < t_end:
+    deadline = time.monotonic() + grace_sec
+    pending = list(queries)
+    while pending:
+        hard_stop = time.monotonic() >= deadline
+        busy = [q for q in pending if not hard_stop and _trigger_active(q)]
+        for q in pending:
+            if q not in busy:
+                q.stop()
+        pending = busy
+        if pending:
+            time.sleep(0.1)
+    # surface (bounded) the sinks' final commits before returning
+    for q in queries:
         try:
-            if not q.isActive or not q.status.get("isTriggerActive", False):
-                break
+            q.awaitTermination(30)
         except Exception:
-            break  # query already terminated under us
-        time.sleep(0.1)
-    q.stop()
-    # surface (bounded) the sink's final commit before returning
+            pass
+
+
+def _trigger_active(q) -> bool:
     try:
-        q.awaitTermination(30)
+        return q.isActive and q.status.get("isTriggerActive", False)
     except Exception:
-        pass
+        return False  # query already terminated under us
 
 
 if __name__ == "__main__":

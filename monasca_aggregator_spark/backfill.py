@@ -73,8 +73,9 @@ def backfill_windows(
     target_path: str,
 ) -> DataFrame:
     """Recompute ``spec`` over [start_ms, end_ms) and publish into the
-    ``day_ms``-hive-partitioned dataset at ``target_path``. Returns
-    the recomputed rows. The range must sit on window boundaries,
+    ``day_ms``-hive-partitioned dataset at ``target_path`` (columns
+    window_ts_ms, tenant_id, name, dims_json, value). Returns the
+    recomputed rows. The range must sit on window boundaries,
     otherwise edge windows would aggregate partial input and publish
     short."""
     w_ms = window_sec * 1000
@@ -90,6 +91,7 @@ def backfill_windows(
         build_aggregation(src, spec, window_sec)
         .select(
             "window_ts_ms",
+            "tenant_id",
             F.col("name"),
             F.to_json(F.col("dimensions")).alias("dims_json"),
             F.col("value"),

@@ -1,14 +1,16 @@
-"""The rule module: every plan the daemon runs for an AggregationSpec.
+"""The rule module: the one plan the daemon, backfill and the catalog
+run for an AggregationSpec.
 
 The reference iterates every message through every rule, keeping running
 aggregates in a hash-of-hashes keyed by (window, tenant+dims)
 (reference: aggregation/aggregation_rule.go:50-77, caching.go). Here the
 whole rule compiles to::
 
-    filter (name / dims / reject / grouped-keys-present)   -- pushdown-able
+    watermark(timestamp, lag)                             -- streaming only
+      → filter (name / dims / reject / grouped-keys-present) -- pushdown-able
       → groupBy(window, tenant, *grouped_dims)              -- ONE shuffle
       → agg(function)                                       -- partial agg map-side
-      → [groupBy(window_start, tenant, *rollup_dims).agg]   -- optional rollup
+      → [groupBy(window, tenant, *rollup_dims).agg]         -- optional rollup
 
 and Catalyst/Tungsten choose the physical strategy. At scale this is a
 single hash-partitioned shuffle on a high-cardinality uniform key; the
@@ -16,22 +18,21 @@ rollup stage re-shuffles the already-aggregated (small) output.
 
 Each step of that shape is defined once here — the predicate
 (``matches_metric``), the group keys (``_group_keys``), the function
-table (``_AGG_EXPRS``), the output-dims map (``_output``) and the rollup
-stage (``_rollup``) — and two plans read from them:
+table (``_AGG_EXPRS``), the window key (``_aggregate``), the
+output-dims map (``_output``) and the rollup stage (``_rollup``) — and
+``build_aggregation`` chains them over a batch or a streaming envelope
+relation alike. What only streaming needs costs batch nothing: Spark
+drops the watermark (reference windowLag, server.go:215) from a batch
+plan, and the heartbeat conjunct that lets quiet topics publish
+(``with_wallclock_heartbeat``) matches no batch row. A streaming
+rollup is a second append-mode aggregation grouped by the first one's
+window struct, so it sees each window once, when the watermark
+finalizes it — when the reference rolls up (aggregation_rule.go:88-136).
 
-- ``build_aggregation``: the batch plan (backfill, catalog queries);
-- ``build_streaming_aggregation``: the continuous plan, which adds only
-  what streaming needs — the watermark (reference windowLag,
-  server.go:215), Spark's epoch-aligned ``F.window`` key (reference
-  windowSize, server.go:213-233), and the heartbeat conjunct that lets
-  quiet topics publish (``with_wallclock_heartbeat``). A rollup is a
-  second append-mode aggregation grouped by the first one's window
-  struct, so it sees each window once, when the watermark finalizes
-  it — when the reference rolls up (aggregation_rule.go:88-136).
-
-Batch ≡ streaming therefore holds by construction;
-tests/test_streaming.py asserts it empirically. ``sql_compile`` renders
-the same rule as SQL text and is pinned equal to ``build_aggregation``.
+Batch ≡ streaming therefore holds by construction: a streaming query
+is the incremental form of the same plan. tests/test_streaming.py
+asserts it empirically. ``sql_compile`` renders the same rule as SQL
+text and is pinned equal to ``build_aggregation``.
 
 Semantics notes vs the reference:
 - ``delta``/``rate`` take first/last by **event time** by default
@@ -42,7 +43,8 @@ Semantics notes vs the reference:
   (YAML ``timeSource: arrival``) orders first/last by an explicit
   arrival column (``arrival_col`` — e.g. the Kafka offset), making the
   arrival semantics reproducible because the order key is data, not
-  executor scheduling.
+  executor scheduling. The daemon's envelope relation has no such
+  column, so ``build_continuous_pipeline`` rejects an arrival rule.
 - ``rate`` over a single sample yields NULL (Δt=0) instead of the
   reference's accidental ``-value/-elapsed`` on its zero-initialized
   struct (rate_metric.go:36-42).
@@ -60,7 +62,6 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from monasca_aggregator_spark.functions.windows import window_start_ms
 from monasca_aggregator_spark.models import AggregationSpec
 
 # Reserved metric name for watermark-advancing heartbeat rows; never
@@ -149,27 +150,33 @@ def _group_keys(keys: tuple[str, ...]) -> list[Column]:
 
 def _aggregate(
     matched: DataFrame,
-    window: Column,
     spec: AggregationSpec,
+    window_size_sec: int,
     *extra: Column,
     order: Column | None = None,
 ) -> DataFrame:
-    """First stage: one row per (window, tenant, grouped values) with
-    the rule's function as ``value`` (plus any ``extra`` aggregates)."""
+    """First stage: one row per (window ``w``, tenant, grouped values)
+    with the rule's function as ``value`` (plus any ``extra`` aggregates)."""
     ts_ms = F.unix_millis(F.col("timestamp"))
     value = _AGG_EXPRS[spec.function](
         F.col("value"), ts_ms, ts_ms if order is None else order
     )
+    window = F.window(F.col("timestamp"), f"{window_size_sec} seconds")
     return matched.groupBy(
-        window, F.col("tenant_id"), *_group_keys(spec.grouped_dimensions)
+        window.alias("w"),
+        F.col("tenant_id"),
+        *_group_keys(spec.grouped_dimensions),
     ).agg(value.alias("value"), *extra)
 
 
+def _window_ts() -> Column:
+    """The output timestamp: the start of window ``w`` in epoch ms
+    (reference: aggregation_rule.go:76)."""
+    return F.unix_millis(F.col("w.start")).alias("window_ts_ms")
+
+
 def _output(
-    out: DataFrame,
-    window_ts: Column,
-    spec: AggregationSpec,
-    keys: tuple[str, ...],
+    out: DataFrame, spec: AggregationSpec, keys: tuple[str, ...]
 ) -> DataFrame:
     """The published envelope shape. Output dimensions =
     filteredDimensions ∪ the grouped values of ``keys``
@@ -180,7 +187,7 @@ def _output(
     for k in keys:
         entries += [F.lit(k), F.col(_ident(k))]
     return out.select(
-        window_ts,
+        _window_ts(),
         F.col("tenant_id"),
         F.lit(spec.aggregated_metric_name).alias("name"),
         F.create_map(*entries).alias("dimensions"),
@@ -188,37 +195,44 @@ def _output(
     )
 
 
-def _rollup(
-    first: DataFrame, spec: AggregationSpec, window: Column, window_ts: Column
-) -> DataFrame:
+def _rollup(first: DataFrame, spec: AggregationSpec) -> DataFrame:
     """Second stage over the rollup's subset keys, grouped by the first
-    stage's ``window`` column; ``window_ts`` is that window's start in
-    ms. Event time is the window start, constant per group: delta
-    degenerates to 0 and rate to NULL, mirroring the reference's re-run
-    of the metric holders on aggregated envelopes
-    (aggregation_rule.go:104-125)."""
+    stage's window struct ``w`` (its event-time metadata lets a stream
+    chain this in append mode). Event time is the window start,
+    constant per group: delta degenerates to 0 and rate to NULL,
+    mirroring the reference's re-run of the metric holders on
+    aggregated envelopes (aggregation_rule.go:104-125)."""
     rollup = spec.rollup
+    window_ts = _window_ts()
     value = _AGG_EXPRS[rollup.function](F.col("value"), window_ts, window_ts)
     keys = [F.col(_ident(k)) for k in rollup.grouped_dimensions]
-    out = first.groupBy(window, F.col("tenant_id"), *keys).agg(
+    out = first.groupBy(F.col("w"), F.col("tenant_id"), *keys).agg(
         value.alias("value")
     )
-    return _output(out, window_ts, spec, rollup.grouped_dimensions)
+    return _output(out, spec, rollup.grouped_dimensions)
 
 
 def build_aggregation(
     df: DataFrame,
     spec: AggregationSpec,
     window_size_sec: int,
+    lag_sec: int = 0,
     *,
     arrival_col: str | None = None,
 ) -> DataFrame:
-    """Return the aggregated-metric DataFrame for one rule.
+    """The plan for one rule, rollup included, over a batch or a
+    streaming envelope relation.
 
     Output schema: window_ts_ms bigint, tenant_id, name string,
     dimensions map<string,string>, value double — one row per
     (window, tenant, group), like the envelopes the reference emits from
-    Rule.GetMetrics (aggregation/aggregation_rule.go:80-136).
+    Rule.GetMetrics (aggregation/aggregation_rule.go:80-136). An
+    envelope with no timestamp belongs to no window and is dropped.
+
+    ``lag_sec`` is the watermark delay (reference windowLag,
+    server.go:215); Spark ignores the watermark on a batch relation.
+    Run a streaming plan in append mode: each window is emitted once,
+    after the watermark passes its end.
     """
     order = None
     if spec.time_source == "arrival":
@@ -228,17 +242,27 @@ def build_aggregation(
                 "arrival_col (e.g. the Kafka offset column)"
             )
         order = F.col(arrival_col)
-    matched = df.filter(
-        matches_metric(spec, F.col("name"), F.col("dimensions"))
+    if dict(df.dtypes).get("timestamp") == "timestamp_ntz":
+        # withWatermark requires TIMESTAMP (with timezone); parquet file
+        # sources may surface event time as TIMESTAMP_NTZ depending on
+        # writer metadata. Session timezone is UTC, so the cast is a
+        # pure type relabel, not a wall-clock shift.
+        df = df.withColumn("timestamp", F.col("timestamp").cast("timestamp"))
+    # heartbeat rows PASS the filter (one OR'd conjunct, so Catalyst's
+    # push-below-watermark still keeps them) and advance the watermark;
+    # they aggregate into their own reserved-tenant groups and are
+    # dropped below via the aggregated __hb flag — the only filter
+    # position the optimizer cannot push underneath the watermark
+    is_hb = F.col("name") == HEARTBEAT_NAME
+    matched = df.withWatermark("timestamp", f"{lag_sec} seconds").filter(
+        matches_metric(spec, F.col("name"), F.col("dimensions")) | is_hb
     )
-    window_ts = window_start_ms(F.col("timestamp"), window_size_sec)
     out = _aggregate(
-        matched, window_ts.alias("window_ts_ms"), spec, order=order
-    )
+        matched, spec, window_size_sec, F.max(is_hb).alias("__hb"), order=order
+    ).filter(F.col("__hb") == F.lit(False))
     if spec.rollup is not None:
-        window_ts = F.col("window_ts_ms")
-        return _rollup(out, spec, window_ts, window_ts)
-    return _output(out, F.col("window_ts_ms"), spec, spec.grouped_dimensions)
+        return _rollup(out, spec)
+    return _output(out, spec, spec.grouped_dimensions)
 
 
 def with_wallclock_heartbeat(env: DataFrame, spark: SparkSession) -> DataFrame:
@@ -252,10 +276,9 @@ def with_wallclock_heartbeat(env: DataFrame, spark: SparkSession) -> DataFrame:
     ``rate`` source emits one row/sec whose event time IS wall clock,
     tagged ``__heartbeat__`` so every spec filter drops it — it
     contributes nothing to any aggregate, but the event-time watermark
-    (applied upstream of the filters in
-    ``build_streaming_aggregation``) tracks wall clock, and idle
-    windows publish within lag + trigger interval, exactly the
-    reference's publication schedule.
+    (applied upstream of the filters in ``build_aggregation``) tracks
+    wall clock, and idle windows publish within lag + trigger interval,
+    exactly the reference's publication schedule.
 
     The rate source is per-partition-0 trivial (1 row/sec) — no
     measurable load at any scale.
@@ -265,7 +288,7 @@ def with_wallclock_heartbeat(env: DataFrame, spark: SparkSession) -> DataFrame:
     the EventTimeWatermark node (PushPredicateThroughNonJoin), so a
     plain "drop heartbeats" pre-aggregation filter would discard them
     before they ever update the watermark. Heartbeat rows therefore
-    PASS the spec filter (build_streaming_aggregation ORs them in),
+    PASS the spec filter (build_aggregation ORs them in),
     flow through the watermark into their own (reserved-tenant) groups,
     and are dropped after aggregation via a predicate on an aggregated
     column — which Catalyst cannot push down.
@@ -284,48 +307,6 @@ def with_wallclock_heartbeat(env: DataFrame, spark: SparkSession) -> DataFrame:
         else:
             exprs.append(F.lit(None).cast(types[c]).alias(c))
     return env.unionByName(hb.select(*exprs))
-
-
-def build_streaming_aggregation(
-    df: DataFrame,
-    spec: AggregationSpec,
-    window_size_sec: int,
-    lag_sec: int,
-) -> DataFrame:
-    """Streaming plan for one rule, rollup included.
-
-    Same output schema as the batch ``build_aggregation``:
-    window_ts_ms, tenant_id, name, dimensions, value. Run it in append
-    mode: each window is emitted once, after the watermark passes its
-    end.
-    """
-    if dict(df.dtypes).get("timestamp") == "timestamp_ntz":
-        # withWatermark requires TIMESTAMP (with timezone); parquet file
-        # sources may surface event time as TIMESTAMP_NTZ depending on
-        # writer metadata. Session timezone is UTC, so the cast is a
-        # pure type relabel, not a wall-clock shift.
-        df = df.withColumn("timestamp", F.col("timestamp").cast("timestamp"))
-    # heartbeat rows PASS the filter (one OR'd conjunct, so Catalyst's
-    # push-below-watermark still keeps them) and advance the watermark;
-    # they aggregate into their own reserved-tenant groups and are
-    # dropped below via the aggregated __hb flag — the only filter
-    # position the optimizer cannot push underneath the watermark
-    is_hb = F.col("name") == HEARTBEAT_NAME
-    matched = df.withWatermark("timestamp", f"{lag_sec} seconds").filter(
-        matches_metric(spec, F.col("name"), F.col("dimensions")) | is_hb
-    )
-    window = F.window(F.col("timestamp"), f"{window_size_sec} seconds")
-    # streaming is consume-order by nature; the deterministic event-time
-    # ordering doubles as the arrival order under watermark replay
-    out = _aggregate(
-        matched, window.alias("w"), spec, F.max(is_hb).alias("__hb")
-    ).filter(F.col("__hb") == F.lit(False))
-    window_ts = F.unix_millis(F.col("w.start")).alias("window_ts_ms")
-    if spec.rollup is not None:
-        # the window struct carries the event-time metadata, so Spark
-        # chains this second aggregation in append mode
-        return _rollup(out, spec, F.col("w"), window_ts)
-    return _output(out, window_ts, spec, spec.grouped_dimensions)
 
 
 def run_stream_with_publish(

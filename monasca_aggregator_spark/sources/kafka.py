@@ -74,10 +74,9 @@ def read_envelope_stream(
 ) -> DataFrame:
     """readStream from Kafka → parsed flat envelope relation.
 
-    The returned DataFrame feeds
-    operators.aggregate.build_streaming_aggregation unchanged — the
-    file-source test path and the Kafka path share every operator
-    downstream of the parse. The wall-clock heartbeat is not applied
+    The returned DataFrame feeds operators.aggregate.build_aggregation
+    unchanged — the file-source test path and the Kafka path share
+    every operator downstream of the parse. The wall-clock heartbeat is not applied
     here: ``config.build_continuous_pipeline`` unions it in (after the
     in_messages counter) when ``EngineConfig.heartbeat`` is on.
     """

@@ -1,9 +1,9 @@
 """Render an AggregationSpec as ONE portable Spark SQL string.
 
 ``operators/aggregate.py`` is the rule module: it compiles a spec into
-the batch and streaming DataFrame plans the daemon runs. This module is
-a separate text renderer of the same rule — the DSL's second backend,
-behind ``--emit-sql``. It stays separate because public PySpark has no
+the one DataFrame plan the daemon, backfill and the catalog run. This
+module is a separate text renderer of the same rule — the DSL's second
+backend, behind ``--emit-sql``. It stays separate because public PySpark has no
 way to turn a Column into SQL; folding the two together would make
 every term branch on its caller. What the text buys:
 
@@ -18,9 +18,10 @@ every term branch on its caller. What the text buys:
   function, filter/reject shape, grouping, and rollup.
 
 The generated SQL mirrors build_aggregation's semantics exactly:
-epoch-aligned integer window starts (ms − pmod(ms, W)), event-time
-first/last for delta/rate (arrival mode via an explicit order
-column), NULL rate on a single sample, reject-dimension NULL
+epoch-aligned integer window starts (ms − pmod(ms, W), the start of
+Spark's ``F.window``; an envelope with no timestamp is dropped),
+event-time first/last for delta/rate (arrival mode via an explicit
+order column), NULL rate on a single sample, reject-dimension NULL
 semantics, and the filteredDimensions ∪ groupedDimensions output map
 (reference: aggregation/aggregation_rule.go:139-173,
 metric_holder.go:44-61 — semantics only; the SQL generation is
@@ -85,6 +86,7 @@ def spec_to_sql(
             preds.append(f"({dim(k)} IS NULL OR {dim(k)} <> {_q(v)})")
     for k in spec.grouped_dimensions:
         preds.append(f"{dim(k)} IS NOT NULL")
+    preds.append("timestamp IS NOT NULL")  # no timestamp, no window
 
     if spec.time_source == "arrival":
         if arrival_col is None:

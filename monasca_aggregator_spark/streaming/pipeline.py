@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from monasca_aggregator_spark.models import AggregationSpec
-from monasca_aggregator_spark.operators.aggregate import build_streaming_aggregation
+from monasca_aggregator_spark.operators.aggregate import build_aggregation
 
 def topk_per_window(k: int, *, by: str = "value"):
     """Publish-time transform: the top-``k`` groups per finalized
@@ -104,7 +104,7 @@ def run_events_stream_to_memory(
     elif dict(raw.dtypes)["ts"] == "timestamp_ntz":
         raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
     env = events_to_envelopes(raw)
-    plan = build_streaming_aggregation(env, spec, window_size_sec, lag_sec)
+    plan = build_aggregation(env, spec, window_size_sec, lag_sec)
     q = (
         plan.writeStream.format("memory")
         .queryName(query_name)

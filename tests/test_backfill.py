@@ -152,3 +152,51 @@ def test_backfill_prunes_source_scan(spark, tmp_path):
         str(tmp_path / "pub"),
     )
     assert out.count() == 2
+
+
+def test_backfill_keeps_tenants_apart(spark, tmp_path):
+    """Two tenants publishing the same window and dims are two rows,
+    before and after a rewrite, each with its own value."""
+    target = str(tmp_path / "published")
+
+    def env(rows):
+        by_tenant = {}
+        for tenant, eid, hour, val in rows:
+            by_tenant.setdefault(tenant, []).append(
+                (eid, T0 + dt.timedelta(hours=hour), 1, "click", val, "{}")
+            )
+        out = None
+        for tenant, evs in by_tenant.items():
+            e = events_to_envelopes(_events(spark, evs), tenant_id=tenant)
+            out = e if out is None else out.unionByName(e)
+        return out
+
+    def published():
+        return {
+            (r.window_ts_ms, r.tenant_id): r.value
+            for r in spark.read.parquet(target).collect()
+        }
+
+    backfill_windows(
+        spark,
+        env([("a", 1, 0, 1.0), ("b", 2, 0, 2.0),
+             ("a", 3, 1, 4.0), ("b", 4, 1, 8.0)]),
+        _spec(), 3600, T0_MS, T0_MS + 2 * HOUR_MS, target,
+    )
+    assert published() == {
+        (T0_MS, "a"): 1.0,
+        (T0_MS, "b"): 2.0,
+        (T0_MS + HOUR_MS, "a"): 4.0,
+        (T0_MS + HOUR_MS, "b"): 8.0,
+    }
+    backfill_windows(
+        spark,
+        env([("a", 5, 1, 16.0), ("b", 6, 1, 32.0)]),
+        _spec(), 3600, T0_MS + HOUR_MS, T0_MS + 2 * HOUR_MS, target,
+    )
+    assert published() == {
+        (T0_MS, "a"): 1.0,
+        (T0_MS, "b"): 2.0,
+        (T0_MS + HOUR_MS, "a"): 16.0,
+        (T0_MS + HOUR_MS, "b"): 32.0,
+    }

@@ -19,7 +19,6 @@ def test_defaults_match_reference_viper_defaults():
     assert cfg.consumer_topic == "metrics"
     assert cfg.producer_topic == "metrics"
     assert cfg.bootstrap_servers == "localhost:9092"
-    assert cfg.group_id == "monasca-aggregation"
 
 
 def test_reference_config_yaml_shape(tmp_path):
@@ -48,7 +47,6 @@ prometheus:
     assert cfg.consumer_topic == "in-metrics"
     assert cfg.producer_topic == "out-metrics"
     assert cfg.bootstrap_servers == "broker-1:9092"
-    assert cfg.group_id == "my-group"
     # unknown sections carried, not dropped
     assert cfg.extras["prometheus"]["endpoint"] == "localhost:8080"
 
@@ -302,6 +300,57 @@ def test_session_partitions_restored_when_a_sink_raises(spark, tmp_path):
         )
     assert seen == [str(max(1, cores // 3))] * 2
     assert spark.conf.get(SHUFFLE) == before
+
+
+def test_arrival_rule_rejected_before_any_query_starts(spark, tmp_path):
+    """The daemon's envelope stream has no arrival column, so it cannot
+    run a ``timeSource: arrival`` rule: the pipeline raises, naming the
+    rule, before the rule ahead of it has started a query."""
+    from monasca_aggregator_spark.config import (
+        EngineConfig,
+        build_continuous_pipeline,
+    )
+    from monasca_aggregator_spark.models import AggregationSpec
+    from monasca_aggregator_spark.sources.envelope import read_envelope_json
+
+    arrival = AggregationSpec(
+        name="arrival_delta",
+        aggregated_metric_name="m.delta",
+        filtered_metric_name="m",
+        function="delta",
+        time_source="arrival",
+    )
+    active = len(spark.streams.active)
+    started = []
+
+    def sink(plan, spec):
+        q = (
+            plan.writeStream.format("memory")
+            .queryName(f"arrival_reject_{spec.name}")
+            .option("checkpointLocation", str(tmp_path / "ck" / spec.name))
+            .outputMode("append")
+            .start()
+        )
+        started.append(q)
+        return q
+
+    try:
+        with pytest.raises(ValueError, match="arrival_delta"):
+            build_continuous_pipeline(
+                spark,
+                EngineConfig.from_dict({"heartbeat": False}),
+                [_sum_rule("sum_first"), arrival],
+                checkpoint_dir=str(tmp_path),
+                source=lambda: read_envelope_json(
+                    spark, str(tmp_path), streaming=True
+                ),
+                sink=sink,
+            )
+        assert started == []
+        assert len(spark.streams.active) == active
+    finally:
+        for q in started:
+            q.stop()
 
 
 def test_restart_keeps_the_checkpointed_partition_count(spark, tmp_path):

@@ -104,7 +104,7 @@ def test_publisher_batches_drive_the_streaming_pipeline(spark, tmp_path):
     from monasca_aggregator_spark.models import AggregationSpec
     from monasca_aggregator_spark.sources.envelope import read_envelope_json
     from monasca_aggregator_spark.operators.aggregate import (
-        build_streaming_aggregation,
+        build_aggregation,
     )
 
     src = tmp_path / "pub"
@@ -122,7 +122,7 @@ def test_publisher_batches_drive_the_streaming_pipeline(spark, tmp_path):
         grouped_dimensions=("service",),
     )
     env = read_envelope_json(spark, str(src), streaming=True)
-    plan = build_streaming_aggregation(env, spec, 60, 0)
+    plan = build_aggregation(env, spec, 60, 0)
     q = (
         plan.writeStream.format("memory")
         .queryName("pub_agg")

@@ -96,13 +96,13 @@ def test_wire_round_trip_through_topic(spark, kafka_ready):
 
 
 def test_streaming_aggregation_from_broker(spark, kafka_ready, tmp_path):
-    """read_envelope_stream → build_streaming_aggregation → memory sink:
+    """read_envelope_stream → build_aggregation → memory sink:
     the reference's consume→aggregate→publish loop against a live
     broker, aggregates checked exactly."""
     from monasca_aggregator_spark.models import AggregationSpec
     from monasca_aggregator_spark.sources.kafka import read_envelope_stream
     from monasca_aggregator_spark.operators.aggregate import (
-        build_streaming_aggregation,
+        build_aggregation,
     )
     from pyspark.sql import functions as F
 
@@ -128,7 +128,7 @@ def test_streaming_aggregation_from_broker(spark, kafka_ready, tmp_path):
         grouped_dimensions=(),
     )
     env = read_envelope_stream(spark, BOOTSTRAP, topic)
-    plan = build_streaming_aggregation(env, spec, 60, 30)
+    plan = build_aggregation(env, spec, 60, 30)
     q = (
         plan.writeStream.format("memory")
         .queryName("kafka_agg_it")

@@ -242,9 +242,6 @@ def test_streamed_envelopes_drive_the_spec_aggregation(spark, tmp_path):
     from monasca_aggregator_spark.operators.aggregate import (
         build_aggregation,
     )
-    from monasca_aggregator_spark.operators.aggregate import (
-        build_streaming_aggregation,
-    )
 
     _registered(spark)
     spec = AggregationSpec(
@@ -279,7 +276,7 @@ def test_streamed_envelopes_drive_the_spec_aggregation(spark, tmp_path):
         .option("rows_per_batch", "150")
         .load()
     )
-    agg = build_streaming_aggregation(stream_env, spec, 60, 0)
+    agg = build_aggregation(stream_env, spec, 60, 0)
     q = (
         agg.writeStream.format("memory")
         .queryName("loadgen_agg")

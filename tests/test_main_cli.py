@@ -230,6 +230,39 @@ def test_cli_ends_when_a_rule_query_fails(spark, tmp_path, monkeypatch):
         t.join(120)
 
 
+def test_drain_and_stop_shares_one_grace_period():
+    """Shutdown waits for busy rule queries against ONE deadline, not
+    one grace period per query: queries that never go idle are all
+    hard-stopped when it passes, and an idle one stops at once."""
+    from monasca_aggregator_spark.__main__ import _drain_and_stop
+
+    class FakeQuery:
+        def __init__(self, busy):
+            self.busy = busy
+            self.isActive = True
+            self.stopped_at = None
+
+        @property
+        def status(self):
+            return {"isTriggerActive": self.busy}
+
+        def stop(self):
+            self.isActive = False
+            self.stopped_at = time.monotonic()
+
+        def awaitTermination(self, timeout=None):
+            return True
+
+    idle = FakeQuery(busy=False)
+    busy = [FakeQuery(busy=True) for _ in range(3)]
+    t0 = time.monotonic()
+    _drain_and_stop([*busy, idle], grace_sec=0.5)
+    elapsed = time.monotonic() - t0
+    assert 0.5 <= elapsed < 1.0, elapsed
+    assert idle.stopped_at - t0 < 0.2
+    assert all(q.stopped_at is not None for q in busy)
+
+
 def test_emit_sql_prints_each_rule_and_exits():
     """--emit-sql: the reference YAML comes out as one SQL statement
     per rule with no Spark session started."""

@@ -9,10 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from monasca_aggregator_spark.models import AggregationSpec, Rollup
-from monasca_aggregator_spark.operators.aggregate import (
-    build_aggregation,
-    build_streaming_aggregation,
-)
+from monasca_aggregator_spark.operators.aggregate import build_aggregation
 from monasca_aggregator_spark.sources.envelope import events_to_envelopes
 from monasca_aggregator_spark.sources.tables import load_table
 from monasca_aggregator_spark.streaming.pipeline import run_events_stream_to_memory
@@ -127,7 +124,7 @@ def test_streaming_dotted_and_underscored_group_keys_stay_distinct(
     )
     env = read_envelope_json(spark, str(src), streaming=True)
     q = (
-        build_streaming_aggregation(env, spec, 60, 0)
+        build_aggregation(env, spec, 60, 0)
         .writeStream.format("memory")
         .queryName("dotted_keys")
         .outputMode("complete")
@@ -144,6 +141,117 @@ def test_streaming_dotted_and_underscored_group_keys_stay_distinct(
         (("a.b", "dot"), ("a_b", "other")): 4.0,
         (("a.b", "dot"), ("a_b", "underscore")): 3.0,
     }
+
+
+T2024_MS = 1_704_067_200_000  # 2024-01-01T00:00:00Z, a 60 s boundary
+
+
+def _write_envelopes(path, rows):
+    """(event time ms or None, value, arrival seq) → one JSONL file of
+    tenant t0 envelopes of metric ``m``; the seq rides in value_meta."""
+    import json as _json
+
+    path.mkdir()
+    (path / "e.jsonl").write_text(
+        "\n".join(
+            _json.dumps(
+                {
+                    "metric": {
+                        "name": "m",
+                        "dimensions": {},
+                        **({} if ts is None else {"timestamp": float(ts)}),
+                        "value": value,
+                        "value_meta": {"seq": str(seq)},
+                    },
+                    "meta": {"tenantId": "t0"},
+                    "creation_time": 0,
+                }
+            )
+            for ts, value, seq in rows
+        )
+    )
+
+
+def _drain_to_memory(spark, plan, name, ckpt):
+    q = (
+        plan.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.table(name)
+
+
+def test_envelope_without_timestamp_dropped_everywhere(spark, tmp_path):
+    """An envelope with no timestamp belongs to no window: the batch
+    plan, the same plan on a stream and the SQL rendering all drop it
+    rather than publish a NULL-window row."""
+    from monasca_aggregator_spark.sources.envelope import read_envelope_json
+    from monasca_aggregator_spark.sql_compile import spec_to_sql
+
+    src = tmp_path / "src"
+    _write_envelopes(src, [(T2024_MS + 5_000, 3.0, 0), (None, 5.0, 1)])
+    spec = AggregationSpec(
+        name="no_ts",
+        aggregated_metric_name="m.sum",
+        filtered_metric_name="m",
+        function="sum",
+    )
+
+    def rows(df):
+        return sorted(
+            (r.window_ts_ms, r.tenant_id, r.name, r.dimensions, r.value)
+            for r in df.collect()
+        )
+
+    expected = [(T2024_MS, "t0", "m.sum", {}, 3.0)]
+    env = read_envelope_json(spark, str(src))
+    assert env.filter(F.col("timestamp").isNull()).count() == 1
+    assert rows(build_aggregation(env, spec, 60)) == expected
+    env.createOrReplaceTempView("envelopes")
+    assert rows(spark.sql(spec_to_sql(spec, 60))) == expected
+    stream = read_envelope_json(spark, str(src), streaming=True)
+    plan = build_aggregation(stream, spec, 60, 0)
+    streamed = _drain_to_memory(spark, plan, "no_ts", tmp_path / "ck")
+    assert rows(streamed) == expected
+
+
+def test_streaming_arrival_order_follows_the_arrival_column(spark, tmp_path):
+    """A ``timeSource: arrival`` delta rule on a stream takes first and
+    last by the arrival column, not by event time: envelopes that
+    arrive in reverse event-time order give the negated delta."""
+    from monasca_aggregator_spark.sources.envelope import read_envelope_json
+
+    src = tmp_path / "src"
+    # (event time, value, arrival seq): arrival reversed vs event time
+    _write_envelopes(
+        src,
+        [
+            (T2024_MS + 55_000, 35.0, 0),
+            (T2024_MS + 30_000, 50.0, 1),
+            (T2024_MS + 5_000, 20.0, 2),
+        ],
+    )
+    spec = AggregationSpec(
+        name="arrival_delta",
+        aggregated_metric_name="m.delta",
+        filtered_metric_name="m",
+        function="delta",
+        time_source="arrival",
+    )
+    stream = read_envelope_json(spark, str(src), streaming=True).withColumn(
+        "arrival", F.col("value_meta").getItem("seq").cast("long")
+    )
+    plan = build_aggregation(stream, spec, 60, 0, arrival_col="arrival")
+    got = _drain_to_memory(
+        spark, plan, "arrival_delta", tmp_path / "ck"
+    ).collect()
+    assert [(r.window_ts_ms, r.value) for r in got] == [
+        (T2024_MS, 20.0 - 35.0)
+    ]
 
 
 def test_watermark_set_on_streaming_plan(spark, sf_small):
@@ -163,7 +271,7 @@ def test_watermark_set_on_streaming_plan(spark, sf_small):
         )
     elif dict(raw.dtypes)["ts"] == "timestamp_ntz":
         raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    plan = build_streaming_aggregation(
+    plan = build_aggregation(
         events_to_envelopes(raw), SPEC, 3600, lag_sec=120
     )
     assert plan.isStreaming
@@ -272,7 +380,7 @@ def test_watermark_drops_late_data_and_finalizes_windows(spark, tmp_path):
         )
     )
     env = read_envelope_json(spark, str(src), streaming=True)
-    plan = build_streaming_aggregation(env, SPEC_LATE, window, lag)
+    plan = build_aggregation(env, SPEC_LATE, window, lag)
     q = (
         plan.writeStream.format("memory")
         .queryName("late_test")
@@ -370,7 +478,7 @@ def test_streaming_rollup_matches_batch(spark, sf_small, tmp_path):
     env_stream = _with_region(events_to_envelopes(raw))
 
     q = (
-        build_streaming_aggregation(env_stream, spec, window, lag)
+        build_aggregation(env_stream, spec, window, lag)
         .writeStream.format("memory")
         .queryName("stream_rollup")
         .outputMode("append")
@@ -551,7 +659,7 @@ def test_continuous_topk_per_window_equals_batch(spark, sf_small):
     )
     if dict(raw.dtypes)["ts"] == "bigint":
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    finalized = build_streaming_aggregation(
+    finalized = build_aggregation(
         events_to_envelopes(raw), spec, 3600, lag
     )
     streamed = run_stream_with_publish(
@@ -945,7 +1053,7 @@ def test_wallclock_heartbeat_finalizes_idle_stream(spark, tmp_path):
     # a rollup rule runs beside the plain one on the same source: its
     # second stage must finalize on the heartbeat too
     queries = [
-        build_streaming_aggregation(env, spec, 60, 30)
+        build_aggregation(env, spec, 60, 30)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")

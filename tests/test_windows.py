@@ -41,8 +41,9 @@ def test_window_id_matches_reference_formula(spark):
 
 
 def test_spark_tumbling_window_agrees(spark):
-    """F.window (used on the streaming path) and window_start_ms (batch
-    path) must bucket identically — the streaming ≡ batch invariant."""
+    """F.window (the window key of build_aggregation's one plan) and
+    window_start_ms (the SQL renderer's and the catalog's integer
+    window start) must bucket identically."""
     rows = [
         (datetime(2024, 3, 1, h, m, s, tzinfo=timezone.utc),)
         for h in (0, 7, 23)

@@ -34,7 +34,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from monasca_aggregator_spark.operators.aggregate import (
-        build_streaming_aggregation,
+        build_aggregation,
     )
     from monasca_aggregator_spark.session import get_spark
     from monasca_aggregator_spark.sources.envelope import parse_envelopes
@@ -60,7 +60,7 @@ def main() -> None:
         function="avg",
         grouped_dimensions=("host",),
     )
-    agg = build_streaming_aggregation(flat, spec, 60, lag_sec=120)
+    agg = build_aggregation(flat, spec, 60, lag_sec=120)
 
     t0 = time.time()
     busy = 0.0
