@@ -111,6 +111,7 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> int:
                 envelopes_to_json(plan)
                 .select("value")  # text sink wants one string column
                 .writeStream.format("text")
+                .queryName(spec.name)
                 .option("path", f"{args.sink_dir}/{spec.name}")
                 .option(
                     "checkpointLocation",

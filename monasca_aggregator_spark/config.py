@@ -15,7 +15,7 @@ Spark-runtime concerns map as:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from monasca_aggregator_spark.models import AggregationSpec
@@ -26,23 +26,27 @@ DEFAULTS = {
     "consumerTopic": "metrics",
     "producerTopic": "metrics",
     "kafka": {"bootstrap.servers": "localhost:9092"},
-}
-
-
-@dataclass(frozen=True)
-class EngineConfig:
-    window_size_sec: int = 10
-    window_lag_sec: int = 2
-    consumer_topic: str = "metrics"
-    producer_topic: str = "metrics"
-    bootstrap_servers: str = "localhost:9092"
     # wall-clock publication for quiet topics (the reference's ticker,
     # server.go:213-296): unions the rate-source heartbeat so windows
     # finalize at lag past close with no new data. On by default —
     # matching the reference's behavior; turn off for availableNow /
     # bounded-replay runs where the source drains and stops.
-    heartbeat: bool = True
-    extras: dict = field(default_factory=dict)
+    "heartbeat": True,
+}
+
+
+@dataclass(frozen=True)
+class EngineConfig:
+    """The runtime settings; ``from_dict`` fills each one, from
+    ``DEFAULTS`` where the file leaves it out."""
+
+    window_size_sec: int
+    window_lag_sec: int
+    consumer_topic: str
+    producer_topic: str
+    bootstrap_servers: str
+    heartbeat: bool
+    extras: dict
 
     @classmethod
     def from_dict(cls, raw: dict[str, Any]) -> "EngineConfig":
@@ -62,7 +66,7 @@ class EngineConfig:
             consumer_topic=str(merged["consumerTopic"]),
             producer_topic=str(merged["producerTopic"]),
             bootstrap_servers=str(kafka["bootstrap.servers"]),
-            heartbeat=bool(merged.get("heartbeat", True)),
+            heartbeat=bool(merged["heartbeat"]),
             extras={k: v for k, v in merged.items() if k not in known},
         )
 
@@ -108,7 +112,8 @@ def build_continuous_pipeline(
     query's checkpoint and restores it on restart, so adding or removing
     rules later leaves existing checkpoints' layout alone. The session's
     own ``spark.sql.shuffle.partitions`` is put back afterwards, also
-    when starting a query raises.
+    when starting a query raises; the queries this call had already
+    started are then stopped before the error propagates.
 
     ``source``/``sink`` default to the Kafka edges (needs a broker +
     connector); inject alternatives to run the SAME composition
@@ -178,11 +183,17 @@ def build_continuous_pipeline(
                 queries.append(
                     write_envelope_stream(
                         plan,
+                        spec.name,
                         config.bootstrap_servers,
                         config.producer_topic,
                         checkpoint_dir=f"{checkpoint_dir}/{spec.name}",
                     )
                 )
+    except BaseException:
+        # the caller gets no handle on the queries already started
+        for q in queries:
+            q.stop()
+        raise
     finally:
         spark.conf.set(SHUFFLE_PARTITIONS, previous)
     return queries

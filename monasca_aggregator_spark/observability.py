@@ -1,4 +1,5 @@
-"""Pipeline self-instrumentation: in/out message counters.
+"""Pipeline self-instrumentation: in/out message counters and stream
+health, exposed in the Prometheus text format.
 
 The reference registers Prometheus ``in_messages`` / ``out_messages``
 counters and increments them per consumed/produced message
@@ -18,11 +19,14 @@ Usage — wrap the edges of any plan:
 
 Streaming: pass ``streaming=True`` (Observation handles are
 batch-only); the same named metrics then arrive per micro-batch in
-``StreamingQueryProgress.observedMetrics`` — poll ``lastProgress`` or
-attach a ``StreamingQueryListener`` and forward anywhere. The
-Prometheus HTTP endpoint itself is a process concern; the engine's
-job is making the counts observable with zero extra passes, which
-observe() does (one codegen'd count per edge, no shuffle, no rescan).
+``StreamingQueryProgress.observedMetrics``. ``ProgressRecorder`` is the
+one listener that reads them: attach it with
+``spark.streams.addListener`` and it keeps each query's recent
+micro-batch health and a running total of every counter per query
+(``counter()``, ``exposition()``), which ``start_http_exporter``
+serves at ``/metrics``. The daemon runs one query per rule and each
+reads every envelope, so the counters are labelled by query: a sum
+over queries would count each envelope once per rule.
 """
 
 from __future__ import annotations
@@ -56,83 +60,10 @@ def count_edge(
     return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
-class CounterRegistry:
-    """Minimal Prometheus counter registry + text exposition.
-
-    The reference exposes ``in_messages``/``out_messages`` over HTTP in
-    the Prometheus text format (server.go:42-48; docs/local_install.md).
-    prometheus_client isn't a dependency here, and the 0.0.4 text
-    format is a public two-line-per-metric spec — so this implements
-    exactly the slice needed: monotonic counters and ``exposition()``.
-    Thread-safe (listener callbacks arrive on Py4J callback threads).
-    """
-
-    def __init__(self) -> None:
-        import threading
-
-        self._lock = threading.Lock()
-        self._counters: dict[str, float] = {}
-
-    def inc(self, name: str, value: float = 1.0) -> None:
-        with self._lock:
-            self._counters[name] = self._counters.get(name, 0.0) + value
-
-    def get(self, name: str) -> float:
-        with self._lock:
-            return self._counters.get(name, 0.0)
-
-    def exposition(self) -> str:
-        """Prometheus text format 0.0.4 (one HELP/TYPE/value stanza per
-        counter; trailing newline required by the spec)."""
-        with self._lock:
-            items = sorted(self._counters.items())
-        lines = []
-        for name, value in items:
-            lines.append(f"# HELP {name} pipeline counter")
-            lines.append(f"# TYPE {name} counter")
-            v = int(value) if float(value).is_integer() else value
-            lines.append(f"{name} {v}")
-        return "\n".join(lines) + "\n"
-
-
-def make_progress_listener(registry: CounterRegistry):
-    """StreamingQueryListener forwarding per-micro-batch
-    ``observedMetrics`` (the count_edge counters) into ``registry``.
-
-    Attach with ``spark.streams.addListener(...)``; every progress
-    event's observed metric named ``in_messages``/``out_messages`` (or
-    any other count_edge name) increments the matching counter — the
-    streaming equivalent of the reference incrementing its counters per
-    consumed/produced message (server.go:232, 330).
-    """
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    class _Forward(StreamingQueryListener):
-        def onQueryStarted(self, event):  # noqa: N802
-            pass
-
-        def onQueryProgress(self, event):  # noqa: N802
-            for name, row in (event.progress.observedMetrics or {}).items():
-                try:
-                    n = row["n"]
-                except (KeyError, TypeError, ValueError):
-                    continue
-                if n is not None:
-                    registry.inc(name, float(n))
-
-        def onQueryIdle(self, event):  # noqa: N802
-            pass
-
-        def onQueryTerminated(self, event):  # noqa: N802
-            pass
-
-    return _Forward()
-
-
 def start_http_exporter(
-    registry: CounterRegistry, port: int = 0
+    recorder: ProgressRecorder, port: int = 0
 ) -> tuple[object, int]:
-    """Serve ``registry.exposition()`` at ``/metrics`` on a daemon
+    """Serve ``recorder.exposition()`` at ``/metrics`` on a daemon
     thread (stdlib http.server — scrape-compatible with Prometheus).
     Returns (server, bound_port); ``server.shutdown()`` stops it.
     ``port=0`` binds an ephemeral port (tests)."""
@@ -145,7 +76,7 @@ def start_http_exporter(
                 self.send_response(404)
                 self.end_headers()
                 return
-            body = registry.exposition().encode()
+            body = recorder.exposition().encode()
             self.send_response(200)
             self.send_header(
                 "Content-Type", "text/plain; version=0.0.4; charset=utf-8"
@@ -163,22 +94,28 @@ def start_http_exporter(
 
 
 class ProgressRecorder(_StreamingQueryListener):
-    """Per-micro-batch stream telemetry as a queryable relation — the
-    operational readout beside the counters: batch duration, input
-    volume, processing rate, WATERMARK LAG (wall clock at progress
-    time minus the event-time watermark — the reference's consumer-lag
-    observable, server.go:213-296, generalized to event time), and
-    stateful-operator footprint.
+    """The package's one ``StreamingQueryListener``: per-micro-batch
+    stream telemetry plus the ``count_edge`` counters of every query.
 
-    A ``StreamingQueryListener`` subclass that keeps the newest
-    ``capacity`` progress records in a bounded deque (thread-safe;
-    callbacks arrive on Py4J threads; a long-running stream cannot
-    grow driver memory). ``records()`` returns plain dicts;
-    ``to_df(spark)`` a DataFrame for SQL over the stream's own health;
-    ``health()`` the one-glance summary an alert rule consumes.
+    Telemetry: batch duration, input volume, processing rate,
+    WATERMARK LAG (wall clock at progress time minus the event-time
+    watermark — the reference's consumer-lag observable,
+    server.go:213-296, generalized to event time), and stateful-operator
+    footprint. The newest ``capacity`` progress records stay in a
+    bounded deque, so a long-running stream cannot grow driver memory.
+    ``records()`` returns plain dicts; ``to_df(spark)`` a DataFrame for
+    SQL over the stream's own health; ``health()`` the one-glance
+    summary an alert rule consumes.
 
-    Attach with ``spark.streams.addListener(recorder)`` — one recorder
-    observes every query on the session; filter by ``query_name``.
+    Counters: each event's ``observedMetrics`` add to running totals
+    keyed by (metric, query name — or query id when the query has no
+    name). They live outside the deque, so eviction never lowers a
+    counter. ``counter()`` reads one; ``exposition()`` renders all of
+    them in the Prometheus text format.
+
+    Thread-safe: callbacks arrive on Py4J threads. Attach with
+    ``spark.streams.addListener(recorder)`` — one recorder observes
+    every query on the session; filter records by ``query_name``.
     """
 
     _FIELDS = (
@@ -193,6 +130,7 @@ class ProgressRecorder(_StreamingQueryListener):
 
         self._lock = threading.Lock()
         self._buf = collections.deque(maxlen=capacity)
+        self._totals: dict[tuple[str, str], float] = {}
 
     # -- StreamingQueryListener interface --
     def onQueryStarted(self, event):  # noqa: N802
@@ -223,9 +161,9 @@ class ProgressRecorder(_StreamingQueryListener):
         return int(dt.timestamp() * 1000)
 
     def record(self, progress: dict) -> None:
-        """Fold one StreamingQueryProgress JSON dict into the buffer
-        (exposed for tests and for polling ``query.lastProgress``
-        without a listener)."""
+        """Fold one StreamingQueryProgress JSON dict into the buffer and
+        the counters (exposed for tests and for polling
+        ``query.lastProgress`` without a listener)."""
         ts_ms = self._iso_ms(progress.get("timestamp"))
         wm_ms = self._iso_ms(
             (progress.get("eventTime") or {}).get("watermark")
@@ -261,8 +199,46 @@ class ProgressRecorder(_StreamingQueryListener):
             if state
             else None,
         }
+        query = progress.get("name") or progress.get("id")
+        counts = [
+            (name, metric["n"])
+            for name, metric in (progress.get("observedMetrics") or {}).items()
+            if (metric or {}).get("n") is not None
+        ]
         with self._lock:
             self._buf.append(row)
+            for name, n in counts:
+                key = (name, query)
+                self._totals[key] = self._totals.get(key, 0) + n
+
+    def counter(self, name: str, query: str) -> float:
+        """Running total of the ``count_edge`` metric ``name`` over every
+        progress event of ``query`` (its name, else its id)."""
+        with self._lock:
+            return self._totals.get((name, query), 0)
+
+    def exposition(self) -> str:
+        """Prometheus text format 0.0.4: one HELP/TYPE pair per metric,
+        one ``name{query="..."} value`` line per query, and the trailing
+        newline the format requires (prometheus_client is not a
+        dependency; counters are the only slice of the format needed)."""
+        with self._lock:
+            items = sorted(self._totals.items())
+        lines, metric = [], None
+        for (name, query), value in items:
+            if name != metric:
+                metric = name
+                lines.append(f"# HELP {name} pipeline counter")
+                lines.append(f"# TYPE {name} counter")
+            label = (
+                str(query)
+                .replace("\\", "\\\\")
+                .replace('"', '\\"')
+                .replace("\n", "\\n")
+            )
+            v = int(value) if float(value).is_integer() else value
+            lines.append(f'{name}{{query="{label}"}} {v}')
+        return "\n".join(lines) + "\n"
 
     def records(self, *, query_name: str | None = None) -> list[dict]:
         with self._lock:

@@ -15,14 +15,12 @@ def get_spark(
     app_name: str = "monasca-aggregator-spark",
     *,
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -26,19 +26,14 @@ from pyspark.sql import functions as F
 
 from monasca_aggregator_spark.sources.envelope import parse_envelopes
 
-DEFAULT_MAX_OFFSETS_PER_TRIGGER = 1_000_000
+MAX_OFFSETS_PER_TRIGGER = 1_000_000
 
 
-def source_options(
-    bootstrap_servers: str,
-    topic: str,
-    *,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int = DEFAULT_MAX_OFFSETS_PER_TRIGGER,
-    fail_on_data_loss: bool = False,
-) -> dict[str, str]:
+def source_options(bootstrap_servers: str, topic: str) -> dict[str, str]:
     """Kafka reader options.
 
+    ``startingOffsets=earliest``: a new rule query reads the topic from
+    the start; once running, its checkpoint holds the offsets.
     ``maxOffsetsPerTrigger`` bounds per-microbatch work so one huge
     backlog replay cannot OOM executors — the scale knob the reference
     lacks (it reads unbounded and relies on windowing GC).
@@ -48,9 +43,9 @@ def source_options(
     return {
         "kafka.bootstrap.servers": bootstrap_servers,
         "subscribe": topic,
-        "startingOffsets": starting_offsets,
-        "maxOffsetsPerTrigger": str(max_offsets_per_trigger),
-        "failOnDataLoss": str(fail_on_data_loss).lower(),
+        "startingOffsets": "earliest",
+        "maxOffsetsPerTrigger": str(MAX_OFFSETS_PER_TRIGGER),
+        "failOnDataLoss": "false",
     }
 
 
@@ -67,10 +62,7 @@ def sink_options(
 
 
 def read_envelope_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    **kwargs,
+    spark: SparkSession, bootstrap_servers: str, topic: str
 ) -> DataFrame:
     """readStream from Kafka → parsed flat envelope relation.
 
@@ -81,7 +73,7 @@ def read_envelope_stream(
     in_messages counter) when ``EngineConfig.heartbeat`` is on.
     """
     reader = spark.readStream.format("kafka")
-    for k, v in source_options(bootstrap_servers, topic, **kwargs).items():
+    for k, v in source_options(bootstrap_servers, topic).items():
         reader = reader.option(k, v)
     return parse_envelopes(reader.load(), value_col="value")
 
@@ -122,16 +114,18 @@ def envelopes_to_json(aggregated: DataFrame) -> DataFrame:
 
 def write_envelope_stream(
     aggregated: DataFrame,
+    rule_name: str,
     bootstrap_servers: str,
     topic: str,
     *,
     checkpoint_dir: str,
 ):
-    """writeStream of an aggregation plan's output to Kafka.
+    """writeStream of one rule's aggregation plan to Kafka.
 
     Always append mode: with the watermark it emits each window once,
     when finalized — the reference's publish-at-lag semantics
-    (server.go:213-296).
+    (server.go:213-296). The query is named ``rule_name``, so its
+    progress events, and the counters read from them, name the rule.
     Returns the started StreamingQuery.
     """
     writer = envelopes_to_json(aggregated).writeStream.format("kafka")
@@ -139,4 +133,4 @@ def write_envelope_stream(
         bootstrap_servers, topic, checkpoint_dir=checkpoint_dir
     ).items():
         writer = writer.option(k, v)
-    return writer.outputMode("append").start()
+    return writer.queryName(rule_name).outputMode("append").start()

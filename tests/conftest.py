@@ -24,7 +24,7 @@ SF_MEDIUM = "/root/testdata/sf0.01"
 def spark():
     from monasca_aggregator_spark.session import get_spark
 
-    spark = get_spark("tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark("tests", cpus=8)
     yield spark
     spark.stop()
 

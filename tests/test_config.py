@@ -282,10 +282,19 @@ def test_session_partitions_restored_when_a_sink_raises(spark, tmp_path):
     before = spark.conf.get(SHUFFLE)
     seen = []
 
+    class StartedQuery:
+        stopped = False
+
+        def stop(self):
+            self.stopped = True
+
+    started = StartedQuery()
+
     def sink(plan, spec):
         seen.append(spark.conf.get(SHUFFLE))
         if len(seen) == 2:
             raise RuntimeError("sink failed")
+        return started
 
     with pytest.raises(RuntimeError, match="sink failed"):
         build_continuous_pipeline(
@@ -300,6 +309,8 @@ def test_session_partitions_restored_when_a_sink_raises(spark, tmp_path):
         )
     assert seen == [str(max(1, cores // 3))] * 2
     assert spark.conf.get(SHUFFLE) == before
+    # the first rule's query is not left running behind the error
+    assert started.stopped
 
 
 def test_arrival_rule_rejected_before_any_query_starts(spark, tmp_path):

@@ -67,61 +67,67 @@ def test_streaming_io_counters_in_progress(spark, tmp_path):
 
 def test_prometheus_exposition_via_listener_and_http(spark, tmp_path):
     """End-to-end reference-parity metrics path: streaming observe →
-    StreamingQueryListener → CounterRegistry → HTTP /metrics text
-    (reference server.go:42-48 + docs/local_install.md exposes
-    in_messages/out_messages the same way)."""
+    ProgressRecorder → HTTP /metrics text (reference server.go:42-48 +
+    docs/local_install.md exposes in_messages/out_messages the same
+    way). Two queries read the same 50 rows, as the daemon's rule
+    queries all read every envelope: each query counts its own 50."""
     import urllib.request
 
     from monasca_aggregator_spark.observability import (
-        CounterRegistry,
-        make_progress_listener,
+        ProgressRecorder,
         start_http_exporter,
     )
 
-    registry = CounterRegistry()
-    listener = make_progress_listener(registry)
-    spark.streams.addListener(listener)
+    recorder = ProgressRecorder()
+    spark.streams.addListener(recorder)
     server = None
+    names = ("prom_out", "prom_out_2")
     try:
         src_dir = tmp_path / "prom_src"
         src_dir.mkdir()
         spark.createDataFrame(
             [(i, float(i)) for i in range(50)], "k long, v double"
         ).write.mode("overwrite").parquet(str(src_dir / "d.parquet"))
-        raw = spark.readStream.schema("k long, v double").parquet(
-            str(src_dir / "d.parquet")
-        )
-        instrumented, _ = count_edge(raw, IN_METRIC, streaming=True)
-        agg = instrumented.groupBy((F.col("k") % 5).alias("b")).agg(
-            F.sum("v").alias("s")
-        )
-        out, _ = count_edge(agg, OUT_METRIC, streaming=True)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("prom_out")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        for name in names:
+            raw = spark.readStream.schema("k long, v double").parquet(
+                str(src_dir / "d.parquet")
+            )
+            instrumented, _ = count_edge(raw, IN_METRIC, streaming=True)
+            agg = instrumented.groupBy((F.col("k") % 5).alias("b")).agg(
+                F.sum("v").alias("s")
+            )
+            out, _ = count_edge(agg, OUT_METRIC, streaming=True)
+            q = (
+                out.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
         # listener callbacks are async; poll until forwarded
         deadline = time.time() + 30
-        while time.time() < deadline and registry.get(IN_METRIC) < 50:
+        while time.time() < deadline and any(
+            recorder.counter(IN_METRIC, n) < 50 for n in names
+        ):
             time.sleep(0.5)
-        assert registry.get(IN_METRIC) == 50
-        assert registry.get(OUT_METRIC) == 5
+        for name in names:
+            assert recorder.counter(IN_METRIC, name) == 50
+            assert recorder.counter(OUT_METRIC, name) == 5
 
-        server, port = start_http_exporter(registry)
+        server, port = start_http_exporter(recorder)
         body = urllib.request.urlopen(
             f"http://127.0.0.1:{port}/metrics", timeout=10
         ).read().decode()
         assert "# TYPE in_messages counter" in body
-        assert "in_messages 50" in body
-        assert "out_messages 5" in body
+        assert body.count("# TYPE in_messages counter") == 1
+        for name in names:
+            assert f'in_messages{{query="{name}"}} 50' in body
+            assert f'out_messages{{query="{name}"}} 5' in body
     finally:
         if server is not None:
             server.shutdown()
-        spark.streams.removeListener(listener)
+        spark.streams.removeListener(recorder)
 
 
 def test_progress_recorder_records_real_stream_health(spark, tmp_path):
@@ -234,3 +240,34 @@ def test_progress_recorder_fold_and_empty_health():
         "last_state_rows": 15,
         "last_state_bytes": 5120,
     }
+
+
+def test_progress_recorder_counts_per_query_beyond_its_capacity():
+    """record() on raw progress dicts: observedMetrics add up per query
+    even after the bounded buffer evicted the records that carried
+    them, and a query name holding a quote, a backslash or a newline is
+    escaped in the exposition's label."""
+    from monasca_aggregator_spark.observability import ProgressRecorder
+
+    odd = 'a"b\\c\nd'
+    rec = ProgressRecorder(capacity=1)
+    for query, n in ((odd, 3), (odd, 4), ("plain", 5)):
+        rec.record(
+            {"name": query, "id": "x", "observedMetrics": {IN_METRIC: {"n": n}}}
+        )
+    rec.record(
+        {"name": None, "id": "id-1", "observedMetrics": {OUT_METRIC: {"n": 2}}}
+    )
+    assert len(rec.records()) == 1
+    assert rec.counter(IN_METRIC, odd) == 7
+    assert rec.counter(IN_METRIC, "plain") == 5
+    assert rec.counter(OUT_METRIC, "id-1") == 2
+    assert rec.exposition() == (
+        "# HELP in_messages pipeline counter\n"
+        "# TYPE in_messages counter\n"
+        'in_messages{query="a\\"b\\\\c\\nd"} 7\n'
+        'in_messages{query="plain"} 5\n'
+        "# HELP out_messages pipeline counter\n"
+        "# TYPE out_messages counter\n"
+        'out_messages{query="id-1"} 2\n'
+    )
