@@ -15,8 +15,10 @@ Spark-runtime concerns map as:
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Any
+from urllib.parse import urlparse
 
 from monasca_aggregator_spark.models import AggregationSpec
 
@@ -79,12 +81,43 @@ class EngineConfig:
 
 
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+CHECKPOINT_FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+# renames with FileSystem.rename; Spark's default, FileContext-based
+# manager forks `readlink` four times per rename on the local file system
+FS_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def state_partitions(spark, n_rules: int) -> int:
     """State partitions for each of ``n_rules`` new rule queries: the
     session's cores shared out among the rules, at least one each."""
     return max(1, spark.sparkContext.defaultParallelism // max(1, n_rules))
+
+
+def _on_local_fs(spark, path: str) -> bool:
+    """``path`` is a ``file:`` URI, or has no scheme and the default
+    file system is the local one."""
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+    return (urlparse(path).scheme or urlparse(default_fs).scheme) == "file"
+
+
+@contextmanager
+def _session_conf(spark, settings: dict[str, str]):
+    """``settings`` on the session inside the block; afterwards each key
+    is back as it was, unset if it was unset."""
+    previous = {key: spark.conf.get(key, None) for key in settings}
+    for key, value in settings.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in previous.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def build_continuous_pipeline(
@@ -114,6 +147,17 @@ def build_continuous_pipeline(
     own ``spark.sql.shuffle.partitions`` is put back afterwards, also
     when starting a query raises; the queries this call had already
     started are then stopped before the error propagates.
+
+    When ``checkpoint_dir`` is on the local file system, the rule
+    queries also start with ``FileSystemBasedCheckpointFileManager``
+    (set and put back like the partition count). Both managers write a
+    checkpoint or sink-log file to a temporary file and ``rename(2)``
+    it into place after an exists check, so restarts and publish-once
+    hold as before; Spark's default, FileContext-based one also forks
+    four ``readlink`` per rename there, dozens of processes per
+    micro-batch. Other schemes (``hdfs://``, ``s3a://``...) keep Spark's
+    default. An injected sink keeps its checkpoint and output under the
+    same file system as ``checkpoint_dir``.
 
     ``source``/``sink`` default to the Kafka edges (needs a broker +
     connector); inject alternatives to run the SAME composition
@@ -166,34 +210,34 @@ def build_continuous_pipeline(
         # counted ABOVE the heartbeat union so in_messages stays a
         # true consumed-envelope count (ticks are not messages)
         env = with_wallclock_heartbeat(env, spark)
+    settings = {SHUFFLE_PARTITIONS: str(state_partitions(spark, len(specs)))}
+    if _on_local_fs(spark, checkpoint_dir):
+        settings[CHECKPOINT_FILE_MANAGER] = FS_CHECKPOINT_FILE_MANAGER
     queries = []
-    # a query copies the session conf when it starts, so the sized
-    # value only has to hold while the rule queries start
-    previous = spark.conf.get(SHUFFLE_PARTITIONS)
-    spark.conf.set(SHUFFLE_PARTITIONS, str(state_partitions(spark, len(specs))))
-    try:
-        for spec in specs:
-            plan = build_aggregation(
-                env, spec, config.window_size_sec, config.window_lag_sec
-            )
-            plan, _ = count_edge(plan, OUT_METRIC, streaming=True)
-            if sink is not None:
-                queries.append(sink(plan, spec))
-            else:
-                queries.append(
-                    write_envelope_stream(
-                        plan,
-                        spec.name,
-                        config.bootstrap_servers,
-                        config.producer_topic,
-                        checkpoint_dir=f"{checkpoint_dir}/{spec.name}",
-                    )
+    # a query copies the session conf when it starts, so the settings
+    # only have to hold while the rule queries start
+    with _session_conf(spark, settings):
+        try:
+            for spec in specs:
+                plan = build_aggregation(
+                    env, spec, config.window_size_sec, config.window_lag_sec
                 )
-    except BaseException:
-        # the caller gets no handle on the queries already started
-        for q in queries:
-            q.stop()
-        raise
-    finally:
-        spark.conf.set(SHUFFLE_PARTITIONS, previous)
+                plan, _ = count_edge(plan, OUT_METRIC, streaming=True)
+                if sink is not None:
+                    queries.append(sink(plan, spec))
+                else:
+                    queries.append(
+                        write_envelope_stream(
+                            plan,
+                            spec.name,
+                            config.bootstrap_servers,
+                            config.producer_topic,
+                            checkpoint_dir=f"{checkpoint_dir}/{spec.name}",
+                        )
+                    )
+        except BaseException:
+            # the caller gets no handle on the queries already started
+            for q in queries:
+                q.stop()
+            raise
     return queries

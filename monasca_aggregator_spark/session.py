@@ -11,6 +11,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """The driver heap when ``SPARK_DRIVER_MEMORY`` is unset: min(8 GB,
+    half of physical RAM), in Spark's memory-size syntax."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(8 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "monasca-aggregator-spark",
     *,
@@ -54,7 +61,20 @@ def get_spark(
         # test parquet carries TIMESTAMP(NANOS); read as long, convert in
         # sources.tables.load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
+        # Janino compiles a stage's generated code only on a miss in this
+        # JVM-wide cache (keyed by the code text). Each rule query keeps
+        # over a dozen classes in use (the 8 benchmark rules' first drain
+        # compiles 143), so the default of 100 entries thrashed and every
+        # micro-batch of every rule query compiled its stages again. A
+        # small projection's class costs about 10 KB of metaspace
+        # (measured over 1,600 classes), so 1,000 of them hold about
+        # 10 MB; a rule's whole-stage classes are larger, and a 120 s
+        # daemon benchmark run peaked no higher than with 100 entries.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         # progress bars write \r frames to stdout — they polluted the
         # driver's bench tail capture in r1/r2; keep stdout JSON-clean

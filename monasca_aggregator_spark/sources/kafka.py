@@ -84,7 +84,11 @@ def envelopes_to_json(aggregated: DataFrame) -> DataFrame:
     value: MetricEnvelope JSON (reference wire format,
     models/metric_envelope.go); key: tenant_id so one tenant's metrics
     land in one partition (ordered per tenant, like the reference's
-    single-writer publish loop).
+    single-writer publish loop). ``creation_time`` is the publication
+    wall clock in epoch ms, read from the JVM's clock as each row is
+    serialized: ``current_timestamp()`` would be folded into the plan as
+    a new literal on every micro-batch, so each batch's output stage
+    would be generated and compiled again.
     """
     # aggregated outputs normally have no value_meta (the reference's
     # aggregated Metric leaves ValueMeta at its zero value); pass one
@@ -104,7 +108,9 @@ def envelopes_to_json(aggregated: DataFrame) -> DataFrame:
             value_meta.alias("value_meta"),
         ).alias("metric"),
         F.create_map(F.lit("tenantId"), F.col("tenant_id")).alias("meta"),
-        F.unix_millis(F.current_timestamp()).alias("creation_time"),
+        F.reflect(F.lit("java.lang.System"), F.lit("currentTimeMillis"))
+        .cast("bigint")
+        .alias("creation_time"),
     )
     return aggregated.select(
         F.col("tenant_id").cast("string").alias("key"),

@@ -7,6 +7,9 @@ parse_envelopes (the wire format is its own inverse)."""
 
 from __future__ import annotations
 
+import json
+import time
+
 from monasca_aggregator_spark.sources import kafka as K
 from monasca_aggregator_spark.sources.envelope import parse_envelopes
 
@@ -49,3 +52,42 @@ def test_envelope_json_roundtrip(spark):
         3600_000,
         7200_000,
     ]
+
+
+AGG_SCHEMA = (
+    "window_ts_ms long, tenant_id string, name string, "
+    "dimensions map<string,string>, value double"
+)
+
+
+def _creation_times(rows):
+    return [json.loads(r.value)["creation_time"] for r in rows]
+
+
+def test_creation_time_is_the_publication_wall_clock(spark, tmp_path):
+    """``creation_time`` is the wall clock in epoch ms when the row is
+    serialized, on batch and streaming relations alike."""
+    agg = spark.createDataFrame(
+        [(3600_000, "t0", "cpu.sum", {"host": "h1"}, 12.5)], AGG_SCHEMA
+    )
+    before = int(time.time() * 1000)
+    rows = K.envelopes_to_json(agg).collect()
+    after = int(time.time() * 1000) + 1
+    assert all(before <= t <= after for t in _creation_times(rows))
+
+    agg.write.parquet(str(tmp_path / "agg"))
+    stream = spark.readStream.schema(AGG_SCHEMA).parquet(str(tmp_path / "agg"))
+    before = int(time.time() * 1000)
+    q = (
+        K.envelopes_to_json(stream)
+        .writeStream.format("memory")
+        .queryName("creation_time_stream")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    after = int(time.time() * 1000) + 1
+    rows = spark.table("creation_time_stream").collect()
+    assert len(rows) == 1
+    assert all(before <= t <= after for t in _creation_times(rows))
