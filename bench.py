@@ -802,10 +802,12 @@ def main() -> None:
             if got is None:
                 continue
             xn, xn_rows = got
-            base = fresh or timings.get(name)
+            # a fresh base of 0.0 is a measurement, not a missing one
+            base = fresh if fresh is not None else timings.get(name)
             entry: dict[str, object] = {"xN_sec": round(xn, 3)}
-            if fresh:
+            if fresh is not None:
                 entry["base_fresh_sec"] = round(fresh, 3)
+            entry["base_source"] = "fresh" if fresh is not None else "headline"
             if timings.get(name):
                 entry["base_sec"] = timings[name]
                 entry["ratio_vs_headline_base"] = round(

@@ -140,13 +140,17 @@ def build_continuous_pipeline(
     state partitions, about one state store per core across the
     queries: every store writes its own delta and checksum files on
     every micro-batch, and that per-store cost, not the data, bounds a
-    small daemon's trigger time. Partial aggregation still runs on every
-    input partition before the shuffle. Spark keeps the count in a
-    query's checkpoint and restores it on restart, so adding or removing
-    rules later leaves existing checkpoints' layout alone. The session's
-    own ``spark.sql.shuffle.partitions`` is put back afterwards, also
-    when starting a query raises; the queries this call had already
-    started are then stopped before the error propagates.
+    small daemon's trigger time. With more than one partition, partial
+    aggregation runs on every input partition before the shuffle; with
+    one, ``build_aggregation`` reads the input into that one partition
+    and plans no shuffle, so each micro-batch is one stage. Spark keeps
+    the count in a query's checkpoint and restores it on restart, so
+    adding or removing rules later leaves existing checkpoints' layout
+    alone (a restored count other than the plan's brings its shuffle
+    back). The session's own ``spark.sql.shuffle.partitions`` is put
+    back afterwards, also when starting a query raises; the queries
+    this call had already started are then stopped before the error
+    propagates.
 
     When ``checkpoint_dir`` is on the local file system, the rule
     queries also start with ``FileSystemBasedCheckpointFileManager``

@@ -7,14 +7,20 @@ aggregates in a hash-of-hashes keyed by (window, tenant+dims)
 whole rule compiles to::
 
     watermark(timestamp, lag)                             -- streaming only
+      → [coalesce(1)]                                       -- one state partition
       → filter (name / dims / reject / grouped-keys-present) -- pushdown-able
-      → groupBy(window, tenant, *grouped_dims)              -- ONE shuffle
+      → groupBy(window, tenant, *grouped_dims)              -- at most ONE shuffle
       → agg(function)                                       -- partial agg map-side
       → [groupBy(window, tenant, *rollup_dims).agg]         -- optional rollup
 
 and Catalyst/Tungsten choose the physical strategy. At scale this is a
 single hash-partitioned shuffle on a high-cardinality uniform key; the
-rollup stage re-shuffles the already-aggregated (small) output.
+rollup stage re-shuffles the already-aggregated (small) output. A
+streaming rule whose state has one partition (the session's
+``spark.sql.shuffle.partitions`` is 1 when it is built, as
+``build_continuous_pipeline`` sets it beside many rules) has none: it
+reads into one partition and aggregates there, rollup included, so
+each micro-batch runs as one stage.
 
 Each step of that shape is defined once here — the predicate
 (``matches_metric``), the group keys (``_group_keys``), the function
@@ -62,6 +68,7 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from monasca_aggregator_spark.config import SHUFFLE_PARTITIONS
 from monasca_aggregator_spark.models import AggregationSpec
 
 # Reserved metric name for watermark-advancing heartbeat rows; never
@@ -232,7 +239,9 @@ def build_aggregation(
     ``lag_sec`` is the watermark delay (reference windowLag,
     server.go:215); Spark ignores the watermark on a batch relation.
     Run a streaming plan in append mode: each window is emitted once,
-    after the watermark passes its end.
+    after the watermark passes its end. A streaming plan built while
+    the session's ``spark.sql.shuffle.partitions`` is 1 reads into one
+    partition and has no shuffle.
     """
     order = None
     if spec.time_source == "arrival":
@@ -254,7 +263,15 @@ def build_aggregation(
     # dropped below via the aggregated __hb flag — the only filter
     # position the optimizer cannot push underneath the watermark
     is_hb = F.col("name") == HEARTBEAT_NAME
-    matched = df.withWatermark("timestamp", f"{lag_sec} seconds").filter(
+    watermarked = df.withWatermark("timestamp", f"{lag_sec} seconds")
+    if df.isStreaming and df.sparkSession.conf.get(SHUFFLE_PARTITIONS) == "1":
+        # state in one partition: a single-partition child meets the
+        # stateful aggregation's distribution, so Spark plans no
+        # Exchange and a micro-batch runs as one stage. Above the
+        # watermark, whose node reports unknown partitioning; a restart
+        # that restores more partitions gets its Exchange back
+        watermarked = watermarked.coalesce(1)
+    matched = watermarked.filter(
         matches_metric(spec, F.col("name"), F.col("dimensions")) | is_hb
     )
     out = _aggregate(
@@ -280,8 +297,10 @@ def with_wallclock_heartbeat(env: DataFrame, spark: SparkSession) -> DataFrame:
     wall clock, and idle windows publish within lag + trigger interval,
     exactly the reference's publication schedule.
 
-    The rate source is per-partition-0 trivial (1 row/sec) — no
-    measurable load at any scale.
+    The rate source is trivial (1 row/sec) and reads one partition;
+    Spark's default, ``defaultParallelism`` partitions, would add that
+    many map tasks to every micro-batch of a rule query whose state has
+    more than one partition.
 
     Optimizer subtlety this design routes around: Catalyst pushes any
     filter conjunct that does not reference the event-time column BELOW
@@ -293,7 +312,12 @@ def with_wallclock_heartbeat(env: DataFrame, spark: SparkSession) -> DataFrame:
     and are dropped after aggregation via a predicate on an aggregated
     column — which Catalyst cannot push down.
     """
-    hb = spark.readStream.format("rate").option("rowsPerSecond", "1").load()
+    hb = (
+        spark.readStream.format("rate")
+        .option("rowsPerSecond", "1")
+        .option("numPartitions", "1")
+        .load()
+    )
     types = dict(env.dtypes)
     exprs = []
     for c in env.columns:

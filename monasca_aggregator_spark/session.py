@@ -75,6 +75,13 @@ def get_spark(
         # 10 MB; a rule's whole-stage classes are larger, and a 120 s
         # daemon benchmark run peaked no higher than with 100 entries.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # A stage's class name carries its whole-stage codegen id, which
+        # counts the stages below it. A streaming no-data batch reads an
+        # empty local relation in place of the parse stage, so every
+        # stage above it got a new id and compiled again: 7 classes per
+        # rule query at its first no-data batch, 9 once a one-partition
+        # rule query runs as one stage; 2 without the id in the name.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         # progress bars write \r frames to stdout — they polluted the
         # driver's bench tail capture in r1/r2; keep stdout JSON-clean

@@ -5,6 +5,7 @@ the same parse the Kafka path uses."""
 from __future__ import annotations
 
 import json
+import re
 
 import pytest
 
@@ -245,6 +246,16 @@ def _drain_rules(spark, specs, src, out, fmt="parquet"):
     )
     for q in queries:
         q.awaitTermination()
+    return queries
+
+
+def _exchanges(query):
+    """The Exchange nodes in the physical plan of ``query``'s last
+    micro-batch, each as (partitioning, partition count)."""
+    plan = query._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    found = re.findall(r"Exchange (\w+)\(.*?, (\d+)\)", plan)
+    assert len(found) == plan.count("Exchange "), plan
+    return [(kind, int(n)) for kind, n in found]
 
 
 def _recorded_partitions(out, name, batch=0):
@@ -258,7 +269,8 @@ def test_rule_queries_share_the_cores_as_state_partitions(spark, tmp_path):
     """Each rule query starts with max(1, cores // rules) state
     partitions: all the cores for one rule, one each when there are
     more rules than cores; the session's own setting is left as it
-    was."""
+    was. A rule query with one partition plans no Exchange; one with
+    more shuffles its rows to them."""
     cores = spark.sparkContext.defaultParallelism
     before = spark.conf.get(SHUFFLE)
     src = tmp_path / "src"
@@ -269,11 +281,15 @@ def test_rule_queries_share_the_cores_as_state_partitions(spark, tmp_path):
     for n_rules, expected in ((1, cores), (cores + 1, 1)):
         out = tmp_path / f"n{n_rules}"
         names = [f"r{i}" for i in range(n_rules)]
-        _drain_rules(spark, [_sum_rule(n) for n in names], src, out)
+        queries = _drain_rules(spark, [_sum_rule(n) for n in names], src, out)
         assert [_recorded_partitions(out, n) for n in names] == [
             expected
         ] * n_rules
         assert spark.conf.get(SHUFFLE) == before
+        # one state partition: the rule aggregates where it reads, in
+        # one stage with no shuffle; more: it hash-partitions its keys
+        shuffles = [] if expected == 1 else [("hashpartitioning", cores)]
+        assert [_exchanges(q) for q in queries] == [shuffles] * n_rules
 
 
 def test_session_partitions_restored_when_a_sink_raises(spark, tmp_path):
@@ -415,11 +431,13 @@ def test_arrival_rule_rejected_before_any_query_starts(spark, tmp_path):
             q.stop()
 
 
-def test_restart_keeps_the_checkpointed_partition_count(spark, tmp_path):
-    """A rule started alone gets every core as a state partition; when
-    it restarts from its checkpoint beside more rules than cores, Spark
-    restores that count, its open window's state carries over, and the
-    committed output equals the batch plan with each window once."""
+def _restart_kept_rule(spark, tmp_path, before, after):
+    """Drain the rule "kept" beside ``before`` other rules, then restart
+    it from its checkpoint beside ``after`` new ones. Asserts that every
+    offset-log entry of "kept" holds the partition count of its first
+    start, that its open window's state carries over, and that each
+    query's committed output equals the batch plan with each window
+    once. Returns the queries of both drains, "kept" first in each."""
     from monasca_aggregator_spark.operators.aggregate import build_aggregation
     from monasca_aggregator_spark.sources.envelope import read_envelope_json
 
@@ -434,8 +452,10 @@ def test_restart_keeps_the_checkpointed_partition_count(spark, tmp_path):
             [("m", f"h{i % 2}", t, float(t)) for i, t in enumerate(range(1, 26, 3))]
         )
     )
-    _drain_rules(spark, [_sum_rule("kept")], src, out)
-    assert _recorded_partitions(out, "kept") == cores
+    old = [f"old{i}" for i in range(before)]
+    first = _drain_rules(spark, [_sum_rule(n) for n in ["kept", *old]], src, out)
+    kept_partitions = max(1, cores // (1 + before))
+    assert _recorded_partitions(out, "kept") == kept_partitions
     # a far-future envelope moves the watermark past every earlier
     # window, so the second drain publishes them all; its own window
     # never closes. (It has to match the rule: the rule's filter runs
@@ -446,16 +466,19 @@ def test_restart_keeps_the_checkpointed_partition_count(spark, tmp_path):
             + [("m", "h0", 1000, 0.0)]
         )
     )
-    new = [f"new{i}" for i in range(cores)]
-    _drain_rules(spark, [_sum_rule(n) for n in ["kept", *new]], src, out)
+    new = [f"new{i}" for i in range(after)]
+    queries = _drain_rules(spark, [_sum_rule(n) for n in ["kept", *new]], src, out)
 
     batches = sorted(
         int(p.name) for p in (out / "ckpt" / "kept" / "offsets").iterdir()
         if p.name.isdigit()
     )
     assert len(batches) > 2, "the restart ran no batch"
-    assert {_recorded_partitions(out, "kept", b) for b in batches} == {cores}
-    assert {_recorded_partitions(out, n) for n in new} == {1}
+    assert {_recorded_partitions(out, "kept", b) for b in batches} == {
+        kept_partitions
+    }
+    new_partitions = max(1, cores // (1 + after))
+    assert [_recorded_partitions(out, n) for n in new] == [new_partitions] * after
 
     def key(r):
         return (r.window_ts_ms, r.tenant_id, tuple(sorted(r.dimensions.items())))
@@ -473,14 +496,39 @@ def test_restart_keeps_the_checkpointed_partition_count(spark, tmp_path):
         got = {key(r): r.value for r in rows}
         assert len(rows) == len(got), f"{name}: a window was emitted twice"
         assert got == expected, name
+    return first, queries
 
 
-def test_rollup_rule_runs_beside_a_plain_rule_across_a_restart(spark, tmp_path):
-    """A rollup rule runs in build_continuous_pipeline beside a plain
-    rule. Each rule's committed output equals build_aggregation on the
-    finalized windows, each (window, tenant, dims) once: after the
-    first drain, and after both queries restart from their
-    checkpoints with a window's first-stage state still open."""
+def test_restart_keeps_the_checkpointed_partition_count(spark, tmp_path):
+    """A rule started alone gets every core as a state partition; when
+    it restarts from its checkpoint beside more rules than cores, Spark
+    restores that count, and shuffles the rule's rows to them although
+    the rules beside it run without a shuffle."""
+    cores = spark.sparkContext.defaultParallelism
+    (first,), (kept, *new) = _restart_kept_rule(spark, tmp_path, 0, cores)
+    assert _exchanges(first) == [("hashpartitioning", cores)]
+    assert _exchanges(kept) == [("hashpartitioning", cores)]
+    assert [_exchanges(q) for q in new] == [[]] * cores
+
+
+def test_restart_alone_keeps_one_checkpointed_partition(spark, tmp_path):
+    """A rule started beside more rules than cores records one state
+    partition and runs without a shuffle; when it restarts alone, the
+    session offers every core, but Spark restores the one partition
+    and shuffles the rule's rows to it, and the committed output
+    still equals the batch plan with each window once."""
+    cores = spark.sparkContext.defaultParallelism
+    first, (kept,) = _restart_kept_rule(spark, tmp_path, cores, 0)
+    assert [_exchanges(q) for q in first] == [[]] * (1 + cores)
+    assert _exchanges(kept) == [("hashpartitioning", 1)]
+
+
+def _drain_across_a_restart(spark, tmp_path, specs):
+    """Drain ``specs``, then restart their queries from their
+    checkpoints with a window's first-stage state still open. Asserts
+    that each rule's committed output equals build_aggregation on the
+    finalized windows, each (window, tenant, dims) once, after either
+    drain. Returns the queries of both drains."""
     from pyspark.sql import functions as F
 
     from monasca_aggregator_spark.operators.aggregate import build_aggregation
@@ -489,7 +537,6 @@ def test_rollup_rule_runs_beside_a_plain_rule_across_a_restart(spark, tmp_path):
     src = tmp_path / "src"
     out = tmp_path / "out"
     src.mkdir()
-    specs = [_sum_rule("plain"), _rollup_rule("rolled")]
 
     def key(r):
         return (r.window_ts_ms, r.tenant_id, tuple(sorted(r.dimensions.items())))
@@ -520,7 +567,7 @@ def test_rollup_rule_runs_beside_a_plain_rule_across_a_restart(spark, tmp_path):
             [("m", f"h{i % 2}", t, float(t)) for i, t in enumerate(range(1, 26, 3))]
         )
     )
-    _drain_rules(spark, specs, src, out, fmt="text")
+    first = _drain_rules(spark, specs, src, out, fmt="text")
     for spec in specs:
         want = expected(spec, 23_000)
         assert len(want) == (4 if spec.rollup is None else 2)
@@ -534,11 +581,33 @@ def test_rollup_rule_runs_beside_a_plain_rule_across_a_restart(spark, tmp_path):
             + [("m", "h0", 1000, 0.0)]
         )
     )
-    _drain_rules(spark, specs, src, out, fmt="text")
+    restarted = _drain_rules(spark, specs, src, out, fmt="text")
     for spec in specs:
         want = expected(spec, 1_000_000)
         assert len(want) == (10 if spec.rollup is None else 5)
         assert committed(spec.name) == want, spec.name
+    return first, restarted
+
+
+def test_rollup_rule_runs_beside_a_plain_rule_across_a_restart(spark, tmp_path):
+    """A rollup rule runs in build_continuous_pipeline beside a plain
+    rule, across a restart."""
+    _drain_across_a_restart(
+        spark, tmp_path, [_sum_rule("plain"), _rollup_rule("rolled")]
+    )
+
+
+def test_rollup_rule_with_one_state_partition_runs_without_a_shuffle(
+    spark, tmp_path
+):
+    """Beside more rules than cores, a rollup rule's two stateful
+    aggregations share its one state partition: the query plans no
+    Exchange, before or after a restart, and its output still equals
+    the batch plan."""
+    cores = spark.sparkContext.defaultParallelism
+    specs = [_rollup_rule("rolled"), *(_sum_rule(f"r{i}") for i in range(cores))]
+    first, restarted = _drain_across_a_restart(spark, tmp_path, specs)
+    assert _exchanges(first[0]) == _exchanges(restarted[0]) == []
 
 
 def test_rule_queries_reuse_their_generated_code_across_micro_batches(
@@ -548,10 +617,10 @@ def test_rule_queries_reuse_their_generated_code_across_micro_batches(
     After each query's first two batches, its later batches find their
     stages' generated code in Spark's codegen cache: the cache holds
     every rule query's classes, and the output stage folds no per-batch
-    value into its code. A later batch still compiles one predicate per
-    rule, the state store's eviction predicate, which carries the
-    batch's watermark as a literal; and the watermark's flush batch,
-    which reads no file, compiles its own stages once."""
+    value into its code. The watermark's flush batch, which reads no
+    file, has fewer stages; since no class name carries its stage's
+    codegen id, the stages above the missing one still find their
+    code."""
     import os
     import time
 
@@ -635,7 +704,9 @@ def test_rule_queries_reuse_their_generated_code_across_micro_batches(
     later_batches = sum(done) - after_two[1]
     later_compilations = compilations.getCount() - after_two[0]
     assert later_batches >= len(specs)
-    # measured: 47 classes over 24 later batches (1.96 per batch); with
+    # measured: 0 classes over 15 later batches; with the codegen id in
+    # the class names, 25-37 over 13-15 once a one-partition rule query
+    # runs as one stage, and 47 over 24 before (1.96 per batch); with
     # Spark's default 100-entry cache and a per-batch literal in the
     # output stage, 260 (10.8 per batch); with either fix alone, 3.96
     # (literal left) and 4.63 (cache left) per batch

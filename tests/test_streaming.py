@@ -1082,6 +1082,39 @@ def test_wallclock_heartbeat_finalizes_idle_stream(spark, tmp_path):
             q.stop()
 
 
+def test_wallclock_heartbeat_reads_one_rate_partition(spark, tmp_path):
+    """One heartbeat row a second needs one partition: the rate source
+    would otherwise take ``defaultParallelism`` of them, one more task
+    in every micro-batch of a rule query with several state
+    partitions."""
+    from monasca_aggregator_spark.operators.aggregate import (
+        with_wallclock_heartbeat,
+    )
+    from monasca_aggregator_spark.sources.envelope import read_envelope_json
+
+    (tmp_path / "src").mkdir()
+    env = with_wallclock_heartbeat(
+        read_envelope_json(spark, str(tmp_path / "src"), streaming=True), spark
+    )
+    q = (
+        build_aggregation(env, SPEC_HB, 60, 30)
+        .writeStream.format("noop")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        rate = [
+            s["description"]
+            for s in q.lastProgress["sources"]
+            if s["description"].startswith("RateStream")
+        ]
+    finally:
+        q.stop()
+    assert len(rate) == 1 and "numPartitions=1" in rate[0], rate
+
+
 SPEC_HB = AggregationSpec(
     name="hb",
     aggregated_metric_name="agg.click.sum.hb",
